@@ -96,12 +96,12 @@ final case class FuzzyPipeline(
   /** findMin (Simple.hs:176): all matches >= minScore per probe.
     *
     * `broadcastProbes` (default true): the reference's query workloads are
-    * lookups — a handful of probes against a large corpus — so the
-    * probe-gram tables are hinted broadcast and the postings side is never
-    * shuffled. For BULK probe workloads (probe set comparable to the
-    * corpus) pass false: an unconditional broadcast of a corpus-sized
-    * probe-gram table would hit the 8 GB broadcast limit / driver memory
-    * instead of degrading to a shuffle join.
+    * lookups — a handful of probes against a large corpus — so the probes
+    * are COLLECTED to the driver, scored map-side against a broadcast probe
+    * index (one pass over the items per gram size, see FindStage.lookup),
+    * and the call runs at once and returns a local DataFrame. For probe
+    * sets too large for the driver pass false: the lazy postings-join
+    * cascade scores them as a distributed bulk join instead.
     */
   def findMin(minScore: Double, probes: DataFrame, broadcastProbes: Boolean = true): DataFrame =
     FindStage.findMin(probes, index, minScore, broadcastProbes)

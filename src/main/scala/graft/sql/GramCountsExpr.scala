@@ -54,17 +54,8 @@ object GramCountsExpr {
     * across JVMs; consumers never depend on the order.
     */
   def compute(u: UTF8String, n: Int): ArrayData = {
-    val s = graft.text.Gram.enclosedIn(graft.text.Gram.normalized(u.toString), '-')
-    // code-point windows, same as Gram.grams / ShinglesExpr
-    val starts = graft.text.Gram.cpStartsOrNull(s)
-    val nWin = graft.text.Gram.windowCount(s, starts, n)
-    if (nWin <= 0) return new GenericArrayData(Array.empty[Any])
-    val counts = new java.util.LinkedHashMap[String, Int]()
-    var i = 0
-    while (i < nWin) {
-      counts.merge(graft.text.Gram.window(s, starts, i, n), 1, (a, b) => a + b)
-      i += 1
-    }
+    val counts = countMap(u.toString, n)
+    if (counts.isEmpty) return new GenericArrayData(Array.empty[Any])
     val out = new Array[Any](counts.size)
     val it = counts.entrySet().iterator()
     var k = 0
@@ -77,5 +68,23 @@ object GramCountsExpr {
       k += 1
     }
     new GenericArrayData(out)
+  }
+
+  /** gram -> occurrence count of `key` at size n: the one counting loop
+    * behind this expression, [[ProbeDotsExpr]] and the driver-side
+    * [[ProbeIndex]], so item and probe vectors cannot drift.
+    */
+  def countMap(key: String, n: Int): java.util.LinkedHashMap[String, Int] = {
+    val s = graft.text.Gram.enclosedIn(graft.text.Gram.normalized(key), '-')
+    // code-point windows, same as Gram.grams / ShinglesExpr
+    val starts = graft.text.Gram.cpStartsOrNull(s)
+    val nWin = graft.text.Gram.windowCount(s, starts, n)
+    val counts = new java.util.LinkedHashMap[String, Int]()
+    var i = 0
+    while (i < nWin) {
+      counts.merge(graft.text.Gram.window(s, starts, i, n), 1, (a, b) => a + b)
+      i += 1
+    }
+    counts
   }
 }

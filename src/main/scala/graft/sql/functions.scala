@@ -58,6 +58,13 @@ object functions {
     org.apache.spark.sql.GraftColumnBridge.column(
       GramCountsExpr(org.apache.spark.sql.GraftColumnBridge.expression(c), n))
 
+  /** array<struct<probe, cosine>>: the key's cosine against every probe of
+    * a broadcast [[ProbeIndex]] it shares a gram with (see ProbeDotsExpr).
+    */
+  def probeDots(key: Column, n: Int, index: org.apache.spark.broadcast.Broadcast[ProbeIndex]): Column =
+    org.apache.spark.sql.GraftColumnBridge.column(
+      ProbeDotsExpr(org.apache.spark.sql.GraftColumnBridge.expression(key), n, index))
+
   /** MinHash signature + SimHash + LSH band tokens of a gram-multiset
     * column in one native pass — struct<sig, simhash, band_hashes>. See
     * [[SigBandsExpr]] for why this is not a UDF.

@@ -1,9 +1,10 @@
 package graft.stage
 
-import graft.sql.{functions => gf}
-import org.apache.spark.sql.DataFrame
+import graft.sql.{ProbeIndex, functions => gf}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Distributed `findMin`/`getMatches` (Internal.hs:76-106, Simple.hs:176-186)
   * plus the two dedup verification flavors.
@@ -18,23 +19,123 @@ import org.apache.spark.sql.functions._
   */
 object FindStage {
 
+  /** (query_id, score, matched, gram_size): the findMin result schema. */
+  private val ResultSchema: StructType = StructType(Seq(
+    StructField("query_id", StringType),
+    StructField("score", DoubleType, nullable = false),
+    StructField("matched", StringType),
+    StructField("gram_size", IntegerType, nullable = false)))
+
   /** Probe-mode findMin. probes: (query_id, query). Returns
     * (query_id, score, matched, gram_size); gram_size 0 = exact pass.
     *
     * Reproduces: exact-key short-circuit (score 1.0, fuzzy skipped) ->
-    * gram-size cascade LARGEST FIRST with anti-join fallthrough (SURVEY §4
-    * O4: the dense size-2 join runs only for probes size 3 missed).
+    * gram-size cascade LARGEST FIRST, a probe falling through to the next
+    * size only when nothing passed at this one (Simple.hs:176-186).
     *
-    * `broadcastProbes` (default true — the reference's query workloads are
-    * tiny next to the corpus): hint the probe-gram side broadcast so the
-    * postings table is NEVER shuffled for a lookup; disable for bulk-probe
-    * workloads whose gram sets exceed broadcast size.
+    * `broadcastProbes` (default true) is the lookup arm ([[lookup]]): the
+    * probes are COLLECTED to the driver and scored map-side against a
+    * broadcast probe index, and the call runs its jobs at once and returns
+    * a local DataFrame. Pass false for probe sets too large for the
+    * driver: the lazy postings-join cascade then scores them as a bulk
+    * join.
     */
   def findMin(
       probes: DataFrame,
       idx: IndexTables,
       minScore: Double,
-      broadcastProbes: Boolean = true): DataFrame = {
+      broadcastProbes: Boolean = true): DataFrame =
+    if (broadcastProbes)
+      probes.sparkSession.createDataFrame(
+        java.util.Arrays.asList(lookup(probes, idx, minScore): _*), ResultSchema)
+    else joinFind(probes, idx, minScore)
+
+  /** The lookup arm of [[findMin]] as driver-side result rows.
+    *
+    *  - The probes are collected and deduplicated by lowercased key; every
+    *    query id answers from its key's results.
+    *  - Exact short-circuit: one keyed filter over `items`.
+    *  - Per gram size, largest first, over the keys still unresolved: a
+    *    [[graft.sql.ProbeIndex]] (stop-list grams left out) is broadcast,
+    *    and one map-side pass over `items` scores each key against it
+    *    ([[graft.sql.ProbeDotsExpr]]) — no postings explode, join or
+    *    group-by. In lev mode the per-probe top-`topKRerank` by (cosine
+    *    desc, key asc) is a row_number window, which Spark trims map-side
+    *    (WindowGroupLimit) before its one shuffle; the Levenshtein rerank
+    *    and the minScore filter follow, then a collect. In cosine mode the
+    *    pass filters instead. Keys with a passing match drop out of the
+    *    next size's index.
+    */
+  private def lookup(probes: DataFrame, idx: IndexTables, minScore: Double): Seq[Row] = {
+    val asked = probes
+      .select(col("query_id").cast("string"), lower(col("query")))
+      .collect()
+      .filterNot(_.isNullAt(1))
+    val keys = asked.map(_.getString(1)).distinct
+    if (keys.isEmpty) return Nil
+
+    // qkey -> (score, matched, gram_size) rows
+    val hits = scala.collection.mutable.HashMap.empty[String, Seq[(Double, String, Int)]]
+    idx.items.filter(col("key").isin(keys.toSeq: _*)).select("key", "original").collect()
+      .foreach(r => hits(r.getString(0)) = Seq((1.0, r.getString(1), 0)))
+
+    var pending = keys.filterNot(hits.contains)
+    for (n <- idx.conf.sizesDesc) {
+      if (pending.nonEmpty) {
+        scorePass(pending, idx, n, minScore).groupBy(_._1).foreach { case (p, ms) =>
+          hits(pending(p)) = ms.map { case (_, score, matched) => (score, matched, n) }.toSeq
+        }
+        pending = pending.filterNot(hits.contains)
+      }
+    }
+    asked.toSeq.flatMap { r =>
+      hits.getOrElse(r.getString(1), Nil).map { case (score, matched, n) =>
+        Row(r.getString(0), score, matched, n)
+      }
+    }
+  }
+
+  /** One gram size of [[lookup]]: (probe, score, matched) for every match
+    * of `keys(probe)` that passes minScore.
+    */
+  private def scorePass(
+      keys: Array[String],
+      idx: IndexTables,
+      n: Int,
+      minScore: Double): Array[(Int, Double, String)] = {
+    val conf = idx.conf
+    val index = ProbeIndex(keys.toIndexedSeq, n, idx.stopGrams.getOrElse(n, Set.empty))
+    if (index.isEmpty) return Array.empty
+    val bc = idx.items.sparkSession.sparkContext.broadcast(index)
+    try {
+      val scored = idx.items
+        .select(col("key"), col("original"), explode(gf.probeDots(col("key"), n, bc)).as("d"))
+        .select(col("d.probe").as("probe"), col("d.cosine").as("cosine"), col("key"),
+          col("original"))
+      val ranked =
+        if (conf.useLevenshtein) {
+          // take-50 BEFORE the expensive rerank (Internal.hs:90); rerank
+          // compares raw lowercased keys, not gram-normalized text
+          // (Internal.hs:91 — SURVEY §7.4 asymmetry trap)
+          val w = Window.partitionBy("probe").orderBy(col("cosine").desc, col("key").asc)
+          val qkey = element_at(typedLit(keys.toSeq), col("probe") + 1)
+          scored
+            .withColumn("rn", row_number().over(w))
+            .filter(col("rn") <= conf.topKRerank)
+            .withColumn("score", gf.levNormSim(qkey, col("key")))
+        } else scored.withColumn("score", col("cosine"))
+      ranked
+        .filter(col("score") >= minScore)
+        .select("probe", "score", "original")
+        .collect()
+        .map(r => (r.getInt(0), r.getDouble(1), r.getString(2)))
+    } finally bc.destroy()
+  }
+
+  /** The bulk arm of [[findMin]] (`broadcastProbes = false`): the lazy
+    * postings-join cascade over a distributed probe set.
+    */
+  private def joinFind(probes: DataFrame, idx: IndexTables, minScore: Double): DataFrame = {
     val p = probes
       .select(col("query_id").cast("string").as("query_id"), col("query"))
       .withColumn("qkey", lower(col("query")))
@@ -48,8 +149,7 @@ object FindStage {
       .join(idx.items.select(col("key").as("qkey")), Seq("qkey"), "left_anti")
       .select("query_id", "qkey")
 
-    val fuzzy = cascade(rest, idx, minScore, excludeSelf = false,
-      smallProbes = broadcastProbes) { (remaining, n) =>
+    val fuzzy = cascade(rest, idx, minScore, excludeSelf = false) { (remaining, n) =>
       // map-side gram counts (GramCountsExpr) — no groupBy per probe
       remaining
         .select(col("query_id"), explode(gf.gramCounts(col("qkey"), n)).as("e"))
@@ -79,7 +179,7 @@ object FindStage {
       lit("fuzzy").as("kind"), col("score"))
   }
 
-  /** Shared gram-size cascade. qgrams(remaining, n) must yield
+  /** Postings-join gram-size cascade. qgrams(remaining, n) must yield
     * (query_id, gram, qcnt) for the still-unresolved probes. Emits
     * (query_id, score, matched, matched_id, gram_size); when excludeSelf,
     * matches with item_id == query_id are dropped AFTER ranking (they still
@@ -90,19 +190,10 @@ object FindStage {
       probes: DataFrame,
       idx: IndexTables,
       minScore: Double,
-      excludeSelf: Boolean,
-      smallProbes: Boolean = false
+      excludeSelf: Boolean
   )(qgrams: (DataFrame, Int) => DataFrame): DataFrame = {
     val conf = idx.conf
 
-    // frequent-gram stop-list (SURVEY §4 O1 / §7.4): a gram appearing in
-    // more than maxPostingsPerGram items turns the postings equi-join
-    // quadratic ("-t" at 10^12 rows is a petabyte of join output) while
-    // carrying almost no cosine discrimination. Drop such grams from the
-    // JOIN only — magnitudes stay full, so scores for retained grams are
-    // unchanged; below the threshold (default 10k) behavior is exactly the
-    // reference's. Documented divergence above it. Computed ONCE for every
-    // gram size (round 1 re-ran the df aggregation per cascade size).
     // SMALL-CORPUS SPREAD (guide §2: shuffles are sized by bytes, this work
     // by CPU): the dots join below fans each posting row out once per probe
     // sharing its gram — on a dense-vocabulary corpus that is tens of
@@ -112,25 +203,20 @@ object FindStage {
     // occurrences span only 432 distinct trigrams). When the pipeline's
     // leaf-stats gate certified the corpus small (IndexTables
     // .spreadParallelism > 0), an explicit round-robin exchange — cost
-    // bounded by the gate — spreads the scan to cluster width; corpus-scale
-    // indexes keep the no-shuffle broadcast-probe plan untouched.
+    // bounded by the gate — spreads the scan to cluster width.
     val postingsSrc =
       if (idx.spreadParallelism > 0) idx.postings.repartition(idx.spreadParallelism)
       else idx.postings
+    // the index's stop-list grams leave the JOIN only (IndexTables.stopGrams)
+    val stop = for ((n, grams) <- idx.stopGrams.toSeq; g <- grams.toSeq) yield (n, g)
     val post =
-      if (conf.maxPostingsPerGram > 0) {
-        val ok = idx.postings
-          .groupBy("gram_size", "gram")
-          .agg(count(lit(1)).as("df"))
-          .filter(col("df") <= conf.maxPostingsPerGram)
-          .select("gram_size", "gram")
-        postingsSrc.join(ok, Seq("gram_size", "gram"), "left_semi")
-      } else postingsSrc
-
-    // probe-side tables are query-workload sized when smallProbes: hint
-    // them broadcast so the corpus-sized postings/norms sides are never
-    // shuffled for a lookup
-    def probeSide(df: DataFrame): DataFrame = if (smallProbes) df.hint("broadcast") else df
+      if (stop.isEmpty) postingsSrc
+      else {
+        val spark = idx.postings.sparkSession
+        import spark.implicits._
+        postingsSrc.join(broadcast(stop.toDF("gram_size", "gram")), Seq("gram_size", "gram"),
+          "left_anti")
+      }
 
     var remaining = probes
     var acc: Option[DataFrame] = None
@@ -140,22 +226,21 @@ object FindStage {
       val qg = qgrams(remaining, n)
       val qnorm = qg.groupBy("query_id").agg(sqrt(sum(col("qcnt") * col("qcnt"))).as("qmag"))
 
-      val dots = probeSide(qg)
+      val dots = qg
         .join(post.filter(col("gram_size") === n).drop("gram_size"), Seq("gram"))
         .groupBy("query_id", "item_id")
         .agg(sum(col("qcnt").cast("long") * col("cnt")).as("dot"))
 
       val inorm = idx.norms.filter(col("gram_size") === n).select(col("item_id"), col("magnitude"))
       val cos = dots
-        .join(probeSide(qnorm), Seq("query_id"))
+        .join(qnorm, Seq("query_id"))
         .join(inorm, Seq("item_id"))
         .filter(col("qmag") > 0 && col("magnitude") > 0)
         .withColumn("cosine", col("dot") / (col("qmag") * col("magnitude")))
 
       val withKeys = cos
         .join(idx.items.select(col("item_id"), col("key"), col("original")), Seq("item_id"))
-        .join(probeSide(remaining), Seq("query_id"))
-
+        .join(remaining, Seq("query_id"))
       val scored =
         if (conf.useLevenshtein) {
           // take-50 BEFORE the expensive rerank (Internal.hs:90); rerank

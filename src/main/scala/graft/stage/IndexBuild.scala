@@ -28,13 +28,35 @@ final case class IndexTables(
     sigs: DataFrame, // (item_id, sig: array<long>, simhash: long, band_hashes: array<long>)
     bands: DataFrame, // (item_id, band_key: long)
     // When > 0, the corpus is PROVABLY SMALL (leaf-stats gate in
-    // FuzzyPipeline): compute-dense posting scans may be spread over this
-    // many partitions by an explicit exchange. The cost of that exchange is
-    // bounded by the small-input gate; a corpus-scale index keeps 0 and its
-    // postings are never repartitioned (the broadcast-probe design never
-    // shuffles them at all). See FindStage.cascade.
+    // FuzzyPipeline): the postings-join cascade may spread its
+    // compute-dense posting scans over this many partitions by an explicit
+    // exchange. The cost of that exchange is bounded by the small-input
+    // gate; a corpus-scale index keeps 0 and its postings are never
+    // repartitioned. Lookups never read postings. See FindStage.cascade.
     spreadParallelism: Int = 0
-)
+) {
+
+  /** Frequent-gram stop-list (SURVEY §4 O1 / §7.4): per gram size, the
+    * grams whose document frequency exceeds `conf.maxPostingsPerGram`.
+    * Such a gram turns the postings equi-join quadratic while carrying
+    * almost no cosine discrimination, so find scoring leaves it out of the
+    * dot products only; magnitudes stay over all grams, so retained grams
+    * score unchanged, and below the threshold behavior is exactly the
+    * reference's. One aggregation over postings per index, on first use,
+    * and none when the threshold is <= 0. The list is bounded by the gram
+    * vocabulary, so it is collected to the driver.
+    */
+  lazy val stopGrams: Map[Int, Set[String]] =
+    if (conf.maxPostingsPerGram <= 0) Map.empty
+    else postings
+      .groupBy("gram_size", "gram")
+      .agg(count(lit(1)).as("df"))
+      .filter(col("df") > conf.maxPostingsPerGram)
+      .select("gram_size", "gram")
+      .collect()
+      .groupBy(_.getInt(0))
+      .map { case (n, rows) => n -> rows.map(_.getString(1)).toSet }
+}
 
 object IndexBuild {
 

@@ -17,7 +17,8 @@ object StreamFind {
 
   /** Continuous `findMin` over a stream of probes (query_id, query)
     * against a static index: each micro-batch runs the batch FindStage
-    * (exact short-circuit + cascade + rerank) and writes results to
+    * lookup (exact short-circuit + cascade + rerank; the batch's probes
+    * are collected to the driver) and writes results to
     * `outDir` partitioned by batch id. foreachBatch alone is only
     * at-least-once (a retried/restarted micro-batch re-runs the write), so
     * the write is made IDEMPOTENT per batch: dynamic partition overwrite on

@@ -68,6 +68,20 @@ class CodegenCompileSpec extends AnyFunSuite with Matchers {
     }
   }
 
+  test("probeDots compiles under codegen-only, no fallback") {
+    strictCodegen {
+      val bc = spark.sparkContext.broadcast(ProbeIndex(Vector("alpha", "vu"), 2, Set.empty))
+      try {
+        val out = texts
+          .select($"s", functions.probeDots($"s", 2, bc).as("d"))
+          .as[(String, Seq[(Int, Double)])].collect().toMap
+        out("alpha beta gamma").map(_._1) shouldBe Seq(0)
+        out("déjà vu").map(_._1) shouldBe Seq(1)
+        out("x") shouldBe empty
+      } finally bc.destroy()
+    }
+  }
+
   test("fused_keys compiles under codegen-only, no fallback") {
     strictCodegen {
       def fusedKeys(bands: Column, simhash: Column): Column =
