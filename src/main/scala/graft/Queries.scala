@@ -852,7 +852,7 @@ object Queries {
           .unionByName(substr.select("a_id", "b_id"))
         val verts = s.read.parquet(s"$stateDir/members")
           .select(col("clip_id").as("id"))
-        graft.stage.Cluster.connectedComponents(verts, edges)
+        graft.stage.Cluster.connectedComponentsWithStats(verts, edges)._1
           .select(col("id").as("clip_id"), col("component"))
           .orderBy("clip_id")
       },

@@ -2,7 +2,7 @@ package graft.api
 
 import graft.conf.FuzzyConf
 import graft.io.TableIO
-import graft.stage.{Candidates, Cluster, FindStage, IndexBuild, IndexTables}
+import graft.stage.{Candidates, Cluster, FindStage, IndexBuild, IndexTables, Scratch}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -21,6 +21,11 @@ import org.apache.spark.sql.functions._
   * val edges = p.dedupEdges()        // exact + LSH + SimHash + verify
   * val clusters = p.clusters()       // connected components over edges
   * }}}
+  *
+  * Input contract: `idCol` values must be unique. The engine does not
+  * check this. A repeated id becomes one vertex per row in connected
+  * components, so [[clusters]] and [[clustersExhaustive]] return duplicate
+  * (clip_id, component) rows for it.
   */
 final case class FuzzyPipeline(
     spark: SparkSession,
@@ -76,10 +81,10 @@ final case class FuzzyPipeline(
 
   /** Below this optimizer-estimated input size the corpus counts as SMALL
     * and compute-dense posting scans may be spread over cluster width by an
-    * explicit exchange (FindStage.cascade): AQE coalesces their byte-tiny
-    * shuffles to 1-2 partitions while the per-row work (gram join fanout,
-    * Levenshtein) is CPU-dense, serializing seconds of compute onto one
-    * core. The exchange's cost is bounded by this gate; inputs with
+    * explicit exchange (FindStage.selfFindEdges): AQE coalesces their
+    * byte-tiny shuffles to 1-2 partitions while the per-row work (gram join
+    * fanout, Levenshtein) is CPU-dense, serializing seconds of compute onto
+    * one core. The exchange's cost is bounded by this gate; inputs with
     * UNKNOWN stats (typed Dataset maps — stats default to huge) and real
     * corpora keep 0 and the query plans are unchanged.
     */
@@ -93,36 +98,30 @@ final case class FuzzyPipeline(
 
   // ---- reference query API (Simple.hs) ---------------------------------
 
-  /** findMin (Simple.hs:176): all matches >= minScore per probe.
-    *
-    * `broadcastProbes` (default true): the reference's query workloads are
-    * lookups — a handful of probes against a large corpus — so the probes
-    * are COLLECTED to the driver, scored map-side against a broadcast probe
-    * index (one pass over the items per gram size, see FindStage.lookup),
-    * and the call runs at once and returns a local DataFrame. For probe
-    * sets too large for the driver pass false: the lazy postings-join
-    * cascade scores them as a distributed bulk join instead.
+  /** findMin (Simple.hs:176): all matches >= minScore per probe. The
+    * reference's query workloads are lookups — a handful of probes against
+    * a large corpus — so the probes are COLLECTED to the driver, scored
+    * map-side against a broadcast probe index (one pass over the items per
+    * gram size, see FindStage.findMin), and the call runs at once and
+    * returns a local DataFrame.
     */
-  def findMin(minScore: Double, probes: DataFrame, broadcastProbes: Boolean = true): DataFrame =
-    FindStage.findMin(probes, index, minScore, broadcastProbes)
+  def findMin(minScore: Double, probes: DataFrame): DataFrame =
+    FindStage.findMin(probes, index, minScore)
 
   /** find = findMin 0.33 (Simple.hs:219-226). */
-  def find(probes: DataFrame, broadcastProbes: Boolean = true): DataFrame =
-    findMin(0.33, probes, broadcastProbes)
+  def find(probes: DataFrame): DataFrame = findMin(0.33, probes)
 
   /** findOneMin (Simple.hs:190): best match per probe. */
-  def findOneMin(minScore: Double, probes: DataFrame, broadcastProbes: Boolean = true): DataFrame =
-    FindStage.bestPerQuery(findMin(minScore, probes, broadcastProbes))
+  def findOneMin(minScore: Double, probes: DataFrame): DataFrame =
+    FindStage.bestPerQuery(findMin(minScore, probes))
 
-  def findOne(probes: DataFrame, broadcastProbes: Boolean = true): DataFrame =
-    findOneMin(0.33, probes, broadcastProbes)
+  def findOne(probes: DataFrame): DataFrame = findOneMin(0.33, probes)
 
   /** closestMatchMin/closestMatch (Simple.hs:204, 244): matched value only. */
-  def closestMatchMin(minScore: Double, probes: DataFrame, broadcastProbes: Boolean = true): DataFrame =
-    findOneMin(minScore, probes, broadcastProbes).select("query_id", "matched")
+  def closestMatchMin(minScore: Double, probes: DataFrame): DataFrame =
+    findOneMin(minScore, probes).select("query_id", "matched")
 
-  def closestMatch(probes: DataFrame, broadcastProbes: Boolean = true): DataFrame =
-    closestMatchMin(0.33, probes, broadcastProbes)
+  def closestMatch(probes: DataFrame): DataFrame = closestMatchMin(0.33, probes)
 
   // ---- reference insertion API (Simple.hs:256-323) ----------------------
 
@@ -256,7 +255,7 @@ final case class FuzzyPipeline(
   // the edge branches; released in edgesMemo once the branch tables are
   // materialized (their write/matSer is the scratch's last consumer).
   // private[api] so the spec can assert the release actually happened
-  private[api] val scratch = new graft.stage.Scratch
+  private[api] val scratch = new Scratch
   // private[api] so the resume spec can assert the fuzzy branch (and with
   // it candidate generation) never ran on a fresh-checkpoint resume
   @volatile private[api] var candidatesCache: DataFrame = _
@@ -384,31 +383,29 @@ final case class FuzzyPipeline(
 
   /** Shared CC driver for both edge sets. The CC loop's surviving blocks
     * (final label generation + contracted-pair labels — endpoint-sized,
-    * real memory at 10^12 rows) are released once the parquet checkpoint
-    * write has consumed them, same pattern as the edge branches above. In
-    * local (no-checkpoint-dir) mode the result is only LAZILY checkpointed
-    * — the label blocks are still its lineage until the first consuming
-    * job — so there is nothing safe to free here and the blocks live for
-    * the pipeline instance, bounded by its corpus.
+    * real memory at 10^12 rows) go to a Scratch of their own, released once
+    * the parquet checkpoint write has consumed them, same pattern as the
+    * edge branches above. In local (no-checkpoint-dir) mode the result is
+    * only LAZILY checkpointed — the label blocks are still its lineage
+    * until the first consuming job — so there is nothing safe to free here
+    * and the blocks live for the pipeline instance, bounded by its corpus.
     */
   private def clustersFrom(edgeSet: () => DataFrame, stage: String): DataFrame = {
     // eager CC work stays inside the by-name ckpt block: on a
     // checkpoint-dir resume the stored labels are re-read without
     // touching the edge stages or re-iterating CC (and then there are no
     // loop blocks to free)
-    var release: () => Unit = () => ()
+    val ccScratch = new Scratch
     val out = ckpt(stage) {
       val edges = edgeSet().select("a_id", "b_id")
       val vertices = index.members.select(col("clip_id").as("id"))
       // members carries one row per source row (IndexBuild derives it from
       // the keyed input without grouping away ids), so the vertex set is
       // distinct by construction — CC may skip its re-proving exchange
-      val (labeled, _, rel) = Cluster.connectedComponentsReleasable(
-        vertices, edges, verticesDistinct = true)
-      release = rel
+      val (labeled, _) = Cluster.components(vertices, edges, ccScratch, verticesDistinct = true)
       labeled.select(col("id").as("clip_id"), col("component"))
     }
-    if (checkpointDir.isDefined) release()
+    if (checkpointDir.isDefined) ccScratch.release()
     out
   }
 }

@@ -33,7 +33,6 @@ package graft.conf
   *                       token-drop/append dups at lower j are covered by
   *                       the exact-substring pass, byte-identical ones by
   *                       the exact pass
-  * @param simhashBits    SimHash fingerprint width (64 = one long)
   * @param seed           base seed for all hash families (deterministic)
   * @param maxBandBucket  rows sharing one LSH band value before the bucket
   *                       is declared HOT: hot buckets switch from the
@@ -64,7 +63,6 @@ package graft.conf
   *                       sqrt(j(1-j)/H) ~ 0.045 at H=126); a run with a
   *                       LOWER minScore must lower this gate in step or
   *                       low-J pairs are silently lost before scoring
-  * @param shufflePartitions value for spark.sql.shuffle.partitions
   * @param substringPrefixLen join-key prefix length for the substring-dup
   *                       pass (suffix-array stand-in, SURVEY §7.4)
   * @param substringMinRatio minimum len(contained)/len(container) for a
@@ -79,14 +77,12 @@ final case class FuzzyConf(
     minhashHashes: Int = 126,
     minhashBands: Int = 21,
     rowsPerBand: Int = 6,
-    simhashBits: Int = 64,
     seed: Long = 42L,
     maxBandBucket: Int = 100,
     saltChunk: Int = 64,
     maxSaltedBucket: Int = 4096,
     maxPostingsPerGram: Int = 10000,
     sigGateMinJaccard: Double = 0.3,
-    shufflePartitions: Int = 32,
     substringPrefixLen: Int = 16,
     substringMinRatio: Double = 0.5
 ) {

@@ -13,11 +13,12 @@ import org.apache.spark.sql.types._
   * Native instead of a UDF because this explode is the flagship's largest
   * row fanout (bands + 4 keys per corpus row): the tuple-returning UDF it
   * replaces boxed the band array in and a Tuple2 per key out through the
-  * Scala converter. Key VALUES are unchanged — band hashes pass through
-  * verbatim, chunk keys are the same shifted 15-bit slices offset by
-  * c << 15 (see Candidates.chunkKey) — so bucket contents, and therefore
-  * the emitted pair set, still match the separate lshPairs/simhashPairs
-  * passes exactly (CandidatesSpec pins the union equality).
+  * Scala converter. Band hashes pass through verbatim; chunk key c (0..3)
+  * is `((simhash >>> 15c) & 0x7fff) + (c << 15)`: the c-th 15-bit slice,
+  * offset into its own range so the four positions never collide. The
+  * shift is logical, so the sign bit never folds into a chunk.
+  * CandidatesSpec pins the resulting pair set against a brute-force
+  * band/Hamming reference.
   */
 case class FusedKeysExpr(left: Expression, right: Expression) extends BinaryExpression {
 

@@ -10,13 +10,15 @@ import org.apache.spark.sql.functions._
   * Three passes, all equi-joins (shuffle-hash/sort-merge under AQE):
   *  - exact: star edges inside identical-key groups — O(group) not
   *    O(group^2), since connected components only needs a spanning star
-  *  - MinHash/LSH: self-join on band keys; three skew regimes by bucket
-  *    size — direct, salted all-pairs, and STAR (member -> bucket-min,
-  *    linear) for flood-sized buckets, so worst-case pair fanout stays
-  *    bounded without losing genuine near-identical floods
-  *  - SimHash: self-join on 15-bit fingerprint chunks (4 chunks of the
-  *    60-bit fingerprint => any pair within hamming distance 3 shares at
-  *    least one exact chunk), verified by bit_count(xor) <= maxHamming
+  *  - fused MinHash/LSH + SimHash ([[fusedPairs]]): one self-join over
+  *    band keys and 15-bit fingerprint chunks (4 chunks of the 60-bit
+  *    fingerprint => any pair within hamming distance 3 shares at least
+  *    one exact chunk, verified by bit_count(xor) <= maxHamming); three
+  *    skew regimes by bucket size — direct, salted all-pairs, and STAR
+  *    (member -> bucket-min, linear) for flood-sized buckets, so
+  *    worst-case pair fanout stays bounded without losing genuine
+  *    near-identical floods
+  *  - substring containment ([[substringPairs]])
   */
 object Candidates {
 
@@ -32,8 +34,15 @@ object Candidates {
         lit("exact").as("kind"),
         lit(1.0).as("score"))
 
-  /** All unordered (a_id < b_id) pairs of item_ids sharing a bucket key,
-    * with three skew regimes by bucket size m (north rule: "salted
+  /** All unordered (a_id < b_id) pairs of item_ids sharing a bucket key
+    * over a mixed key space: `keyed` has columns (bkey, ktype, item_id,
+    * sh). Rows with ktype = 1 are SimHash chunk keys carrying the full
+    * fingerprint in `sh`; pairs from those buckets are kept only at
+    * hamming(a_sh, b_sh) <= maxHamming, and the filter runs BEFORE the pair
+    * distinct, inside the join stage, so only survivors reach the distinct
+    * (the raw 15-bit-chunk collision volume is ~n^2/2^15 pairs).
+    *
+    * Three skew regimes by bucket size m (north rule: "salted
     * repartitioning for skewed shingle bands"):
     *
     *  - m <= cap: direct in-bucket self-join — at most ~cap^2 candidate
@@ -41,47 +50,20 @@ object Candidates {
     *  - cap < m <= maxSalted: SALTED all-pairs — members split into
     *    ceil(m/saltChunk) chunks by an id hash; the A side keeps its home
     *    chunk, the B side is replicated to EVERY chunk, and the join key
-    *    becomes (bkey, chunk). Every unordered pair is still produced
-    *    exactly once (ordered pair (a,b) materializes only in a's home
-    *    chunk; a < b filter halves), but per-task work is bounded by
+    *    becomes (bkey, ktype, chunk). Every unordered pair is still
+    *    produced exactly once (ordered pair (a,b) materializes only in a's
+    *    home chunk; a < b filter halves), but per-task work is bounded by
     *    saltChunk x m instead of m^2 serializing in one task;
     *  - m > maxSalted: STAR — each member pairs with the bucket minimum
-    *    only (see FuzzyConf.maxSaltedBucket and [[taggedSelfPairs]]).
-    *
-    * `keyed` must have columns (bkey, item_id).
-    */
-  private[stage] def bucketSelfPairs(
-      keyed: DataFrame,
-      cap: Int,
-      saltChunk: Int,
-      maxSalted: Int,
-      scratch: Scratch = Scratch.noop): DataFrame =
-    taggedSelfPairs(
-      keyed.select(col("bkey"), lit(0).as("ktype"), col("item_id"), lit(0L).as("sh")),
-      cap, saltChunk, maxSalted, maxHamming = 0, scratch)
-
-  /** [[bucketSelfPairs]] generalized to a mixed key space: `keyed` has
-    * columns (bkey, ktype, item_id, sh). Rows with ktype = 1 are SimHash
-    * chunk keys carrying the full fingerprint in `sh`; pairs from those
-    * buckets are kept only at hamming(a_sh, b_sh) <= maxHamming, and the
-    * filter runs BEFORE the pair distinct. That placement is the scale
-    * lever: at corpus size n the raw 15-bit-chunk collision volume is
-    * ~n^2/2^15 pairs (~8M rows at 400k items), and round 2 shuffled all of
-    * it through a distinct plus two signature re-joins before filtering —
-    * here the xor/bit_count runs inside the join stage and only survivors
-    * (plus LSH pairs) reach the distinct.
-    *
-    * Buckets beyond maxSalted enter the STAR regime (round 2 dropped
-    * them): each member pairs with the bucket minimum only — |bucket|
-    * candidates instead of |bucket|^2/2. A genuine near-identical flood IS
-    * a real duplicate cluster that produces exactly such buckets; the star
-    * is the spanning structure connected components needs, and
-    * verification prunes the two failure shapes cheaply: a DEGENERATE band
-    * (near-constant signature band over dissimilar items) yields star
-    * edges that fail the signature gate at |bucket| cost, and a
-    * chain-shaped flood whose far ends fail rep-verification still
-    * recovers through its other, independent band draws (only buckets
-    * > maxSalted go star).
+    *    only, |bucket| candidates instead of |bucket|^2/2. A genuine
+    *    near-identical flood IS a real duplicate cluster that produces
+    *    exactly such buckets; the star is the spanning structure connected
+    *    components needs, and verification prunes the two failure shapes
+    *    cheaply: a DEGENERATE band (near-constant signature band over
+    *    dissimilar items) yields star edges that fail the signature gate at
+    *    |bucket| cost, and a chain-shaped flood whose far ends fail
+    *    rep-verification still recovers through its other, independent band
+    *    draws (only buckets > maxSalted go star).
     */
   private[stage] def taggedSelfPairs(
       keyed: DataFrame,
@@ -95,41 +77,27 @@ object Candidates {
       .agg(count(lit(1)).as("bucket_n"))
       .filter(col("bucket_n") > 1)
       .localCheckpoint(false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
-    // six downstream branches (small a/b, hot A/B, flood x2) consume the
-    // keyed-with-size table. When the non-singleton bucket directory is
-    // small (the common case — most band values are unique), BROADCAST it
-    // and let every branch recompute the cheap map-side key explode: no
-    // multi-million-row block-store materialization (whose long-lived
-    // objects were a measured full-GC driver that scaled with task count),
-    // no shuffle for the size join. Beyond the limit, fall back to the
-    // shuffle join materialized once (the 10^12-scale shape).
     // ONE stats job over the materialized directory blocks: row count
     // (broadcast-vs-shuffle decision) and largest bucket (regime gating)
     val dirStats = sizes
       .agg(count(lit(1)).as("n"), coalesce(max("bucket_n"), lit(0L)).as("mx")).head()
     val (dirRows, maxBucketN) = (dirStats.getLong(0), dirStats.getLong(1))
-    val withN =
-      if (dirRows <= bucketDirBroadcastLimit) {
-        val joined = keyed.join(sizes.hint("broadcast"), Seq("bkey", "ktype"))
-        // materialize the PRUNED keyed-with-size table once (scratch-tracked,
-        // released with the branch): the directory inner-join drops every
-        // singleton-bucket key, so the blocks hold only collision-bucket
-        // members — a small fraction of the corpus-×-bands explode — and the
-        // a/b sides of the pair self-join read those blocks instead of each
-        // re-running the full sigs-scan + key explode + broadcast join
-        // (guide §1.2 "don't recompute"; interleaved A/B at 1.6M clips:
-        // 13.5-17.1 s -> 9.8-12.1 s for the candidates stage, same pairs).
-        // Seam: graft.cand.withn / GRAFT_CAND_WITHN = "nomat" restores the
-        // recompute-per-branch arm for A/Bs.
-        val withNMode = sys.props.get("graft.cand.withn")
-          .orElse(sys.env.get("GRAFT_CAND_WITHN"))
-        if (withNMode.contains("nomat")) joined
-        else
-          scratch.track(joined.localCheckpoint(false,
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
-      } else
-        scratch.track(keyed.join(sizes, Seq("bkey", "ktype"))
-          .localCheckpoint(false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
+    // six downstream branches (small a/b, hot A/B, flood x2) consume the
+    // keyed-with-size table. When the non-singleton bucket directory is
+    // small (the common case — most band values are unique), BROADCAST it:
+    // no shuffle for the size join. Beyond the limit, fall back to the
+    // shuffle join (the 10^12-scale shape).
+    val dirSide = if (dirRows <= bucketDirBroadcastLimit) sizes.hint("broadcast") else sizes
+    // materialize the PRUNED keyed-with-size table once (scratch-tracked,
+    // released with the branch): the directory inner-join drops every
+    // singleton-bucket key, so the blocks hold only collision-bucket
+    // members — a small fraction of the corpus-×-bands explode — and the
+    // a/b sides of the pair self-join read those blocks instead of each
+    // re-running the full sigs-scan + key explode + directory join
+    // (guide §1.2 "don't recompute"; interleaved A/B at 1.6M clips:
+    // 13.5-17.1 s -> 9.8-12.1 s for the candidates stage, same pairs).
+    val withN = scratch.track(keyed.join(dirSide, Seq("bkey", "ktype"))
+      .localCheckpoint(false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
     val keep = (col("ktype") =!= 1) ||
       bit_count(col("a_sh").bitwiseXOR(col("b_sh"))) <= maxHamming
 
@@ -192,17 +160,6 @@ object Candidates {
     unioned.distinct()
   }
 
-  /** Unordered candidate pairs (a_id < b_id) from LSH band collisions. */
-  def lshPairs(
-      bands: DataFrame,
-      maxBandBucket: Int,
-      saltChunk: Int = 64,
-      maxSaltedBucket: Int = 4096,
-      scratch: Scratch = Scratch.noop): DataFrame =
-    bucketSelfPairs(
-      bands.select(col("band_key").as("bkey"), col("item_id")),
-      maxBandBucket, saltChunk, maxSaltedBucket, scratch)
-
   /** Above this many contained-side keys the sorted prefix-hash array can
     * no longer broadcast (~8 bytes/key: 20M keys = 160 MB) and the
     * substring pass falls back to the generic explode-join.
@@ -221,13 +178,6 @@ object Candidates {
     */
   private val substringPairBroadcastLimit = 1000000L
 
-  /** A/B seam: "off" restores the round-5 recompute/SMJ arms of the
-    * substring pass (lazy matches, un-materialized candidate pairs).
-    */
-  private def substrMatOff: Boolean =
-    sys.props.get("graft.substr.mat")
-      .orElse(sys.env.get("GRAFT_SUBSTR_MAT")).contains("off")
-
   /** Below this optimizer-estimated items size the substring pass keeps
     * its lazy round-5 plan: the materialize + count jobs that pay for
     * themselves on a corpus-scale input (one fewer full window-hash pass,
@@ -239,13 +189,12 @@ object Candidates {
     * the small-corpus spread (Queries.spreadSmall / FuzzyPipeline).
     */
   private val substrMatMinBytes = 64L << 20
-  private def substrLazy(items: DataFrame): Boolean =
-    substrMatOff || {
-      val est =
-        try items.queryExecution.optimizedPlan.stats.sizeInBytes
-        catch { case scala.util.control.NonFatal(_) => BigInt(Long.MaxValue) }
-      est <= substrMatMinBytes
-    }
+  private def substrLazy(items: DataFrame): Boolean = {
+    val est =
+      try items.queryExecution.optimizedPlan.stats.sizeInBytes
+      catch { case scala.util.control.NonFatal(_) => BigInt(Long.MaxValue) }
+    est <= substrMatMinBytes
+  }
 
   /** Exact substring-containment pairs — the distributed realization of
     * the north rule's suffix-array pass (SURVEY §7.4). A key `a` is a
@@ -323,9 +272,7 @@ object Candidates {
         // re-runs the full corpus scan + per-window hash/binary-search UDF
         // pass. The hits hold only MATCHING windows — candidate-volume
         // sized, tiny next to the corpus — so the blocks are cheap by
-        // construction in this (broadcast) regime. Seam:
-        // graft.substr.mat/GRAFT_SUBSTR_MAT = "off" restores the
-        // recompute-per-consumer arm for A/Bs.
+        // construction in this (broadcast) regime.
         if (lazyPlan) hits
         else scratch.track(hits.localCheckpoint(false,
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
@@ -520,45 +467,14 @@ object Candidates {
       out.toArray
     }
 
-  /** SimHash chunk key for chunk position c: the c-th 15-bit slice of the
-    * fingerprint, offset into its own range so the four positions never
-    * collide. Logical (unsigned) shift: arithmetic sign extension would
-    * fold the sign bit into every chunk and split buckets for pairs whose
-    * fingerprints differ only at bit 63 (a 1-bit hamming miss in round 2's
-    * `%`-based string keys).
-    */
-  private def chunkKey(sh: org.apache.spark.sql.Column, c: Int) =
-    shiftrightunsigned(sh, 15 * c).bitwiseAND(lit(0x7fffL)) + lit(c.toLong << 15)
-
-  /** Unordered candidate pairs from SimHash chunk collisions at
-    * hamming distance <= maxHamming (pigeonhole over 4 x 15-bit chunks:
-    * <= 3 differing bits leave at least one chunk identical). Shares the
-    * three-regime skew handling of [[taggedSelfPairs]]; the hamming filter
-    * runs inside the bucket join, before the pair distinct.
-    */
-  def simhashPairs(
-      sigs: DataFrame,
-      maxHamming: Int,
-      maxBandBucket: Int,
-      saltChunk: Int = 64,
-      maxSaltedBucket: Int = 4096,
-      scratch: Scratch = Scratch.noop): DataFrame = {
-    val chunked = sigs.select(
-      explode(array((0 until 4).map(c => chunkKey(col("simhash"), c)): _*)).as("bkey"),
-      lit(1).as("ktype"),
-      col("item_id"),
-      col("simhash").as("sh"))
-    taggedSelfPairs(chunked, maxBandBucket, saltChunk, maxSaltedBucket, maxHamming, scratch)
-  }
-
-  /** LSH band keys and SimHash chunk keys fused into ONE keyed table ->
-    * one bucket-size aggregation, one materialization, one self-join, one
-    * distinct — half the candidate-generation stage chain of running
-    * [[lshPairs]] and [[simhashPairs]] separately. The serial length of
-    * that chain is what bounds single-box (and per-executor) scaling; the
-    * work per stage is identical. Band keys and chunk keys live in
-    * disjoint (bkey, ktype) spaces, so bucket contents — and therefore the
-    * emitted pair set — match the separate passes exactly.
+  /** Unordered candidate pairs (a_id < b_id) from LSH band collisions and
+    * from SimHash chunk collisions at hamming distance <= maxHamming
+    * (pigeonhole over 4 x 15-bit chunks: <= 3 differing bits leave at
+    * least one chunk identical). Band keys and chunk keys are fused into
+    * ONE keyed table -> one bucket-size aggregation, one materialization,
+    * one self-join, one distinct: the serial length of that stage chain is
+    * what bounds single-box (and per-executor) scaling. The two key kinds
+    * live in disjoint (bkey, ktype) spaces, so a bucket never mixes them.
     */
   def fusedPairs(
       sigs: DataFrame,
@@ -588,27 +504,6 @@ object Candidates {
       .select(col("item_id"), col("simhash").as("sh"), explode(fusedKeys).as("k"))
       .select(col("k.bkey").as("bkey"), col("k.ktype").as("ktype"), col("item_id"), col("sh"))
   }
-
-  /** Unordered candidate pairs TOUCHING the `newSigs` side — signature-table
-    * convenience form of [[incrementalPairsFromKeys]] (both sides pay the
-    * fused-key explode here; the streaming pipeline maintains a persistent
-    * key table instead and calls the keys form directly).
-    *
-    * NOTE: pair generation local-checkpoints the pruned key-state
-    * membership internally. With the default [[Scratch.noop]] those blocks
-    * stay pinned for the SparkContext lifetime — fine for a one-shot call,
-    * but a long-lived driver calling this per micro-batch must pass its
-    * own `scratch` and `release()` it once the returned pairs are
-    * materialized, or the pinned blocks grow by one pruned-state-sized set
-    * per batch (StreamDedup.processBatch does exactly that).
-    */
-  def incrementalPairs(
-      newSigs: DataFrame,
-      allSigs: DataFrame,
-      maxHamming: Int,
-      maxBucket: Int,
-      scratch: Scratch = Scratch.noop): DataFrame =
-    incrementalPairsFromKeys(fusedKeyed(newSigs), fusedKeyed(allSigs), maxHamming, maxBucket, scratch)
 
   /** Candidate pairs touching the batch side, over fused-KEY tables
     * (bkey, ktype, item_id, sh): `newKeys` the arriving batch's keys,

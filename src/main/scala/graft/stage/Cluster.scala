@@ -29,8 +29,10 @@ object Cluster {
     GraftColumnBridge.checkpointedRdd(df).foreach(_.unpersist(blocking = false))
 
   /** edges: (a_id, b_id) undirected; vertices: one column `id` (superset of
-    * edge endpoints). Returns (id, component) where component = min id in
-    * the component.
+    * edge endpoints). Returns (id, component), where component = min id in
+    * the component, and the number of label-propagation iterations run —
+    * the O(log d) pointer-jumping claim is pinned by ClusterSpec on a
+    * depth-10^4 chain graph.
     *
     * The loop iterates over edge ENDPOINTS only: a vertex with no edge can
     * never change label, so the (typically corpus-sized) singleton set
@@ -39,65 +41,44 @@ object Cluster {
     * Isolated PAIRS (both endpoints degree 1 — the dominant duplicate
     * shape in web dedup) are contracted to min(src,dst) before the loop,
     * so only the residual multi-edge subgraph iterates at all.
-    */
-  def connectedComponents(vertices: DataFrame, edges: DataFrame, maxIter: Int = 25): DataFrame =
-    connectedComponentsWithStats(vertices, edges, maxIter)._1
-
-  /** [[connectedComponents]] plus the number of label-propagation
-    * iterations run — the O(log d) pointer-jumping claim is pinned by
-    * ClusterSpec on a depth-10^4 chain graph.
     *
-    * NOTE: the non-releasable overloads (this and [[connectedComponents]])
-    * discard the release hook, so the loop's surviving checkpoint blocks —
-    * the final label generation AND the contracted-pair labels, both
-    * endpoint-sized — stay pinned until the SparkContext ends. They are
-    * test/validation conveniences; production callers (FuzzyPipeline) use
-    * [[connectedComponentsReleasable]] and invoke the hook after durably
-    * materializing the result.
+    * The loop's surviving checkpoint blocks (the final label generation
+    * and the contracted-pair labels, both endpoint-sized) stay pinned until
+    * the SparkContext ends. The engine's own callers free them through the
+    * `Scratch` of [[components]].
     */
   def connectedComponentsWithStats(
       vertices: DataFrame,
       edges: DataFrame,
       maxIter: Int = 25): (DataFrame, Int) =
-    connectedComponentsWithStats(vertices, edges, maxIter, maxBroadcastEndpoints = 2000000L)
+    components(vertices, edges, Scratch.noop, maxIter = maxIter)
 
-  /** Test seam: `maxBroadcastEndpoints` gates the per-iteration broadcast
-    * label joins — ClusterSpec drives it to 0 to pin the shuffle-join
-    * regime that production only enters beyond 2M edge endpoints.
-    */
-  private[graft] def connectedComponentsWithStats(
-      vertices: DataFrame,
-      edges: DataFrame,
-      maxIter: Int,
-      maxBroadcastEndpoints: Long): (DataFrame, Int) = {
-    val (out, iter, _) =
-      connectedComponentsReleasable(vertices, edges, maxIter, maxBroadcastEndpoints)
-    (out, iter)
-  }
-
-  /** Like [[connectedComponentsWithStats]] but also returns a release hook
-    * that unpersists the loop's surviving checkpoint blocks (the final
-    * label generation + the contracted-pair labels — both endpoint-sized,
-    * which at 10^12-row scale is real executor memory). The returned
-    * DataFrame is a plan OVER those blocks, so the hook must only run
-    * after the caller has durably materialized the result (e.g. a parquet
-    * checkpoint write); freeing earlier loses the labels — a locally
-    * checkpointed RDD's lineage is truncated and cannot recompute.
-    */
-  /** `verticesDistinct = true` promises every `vertices.id` is already
+  /** [[connectedComponentsWithStats]] with its surviving checkpoint blocks
+    * `scratch`-tracked. The returned DataFrame is a plan OVER those blocks,
+    * so `scratch.release()` must only run after the caller has durably
+    * materialized the result (e.g. a parquet checkpoint write); freeing
+    * earlier loses the labels — a locally checkpointed RDD's lineage is
+    * truncated and cannot recompute.
+    *
+    * `verticesDistinct = true` promises every `vertices.id` is already
     * unique (e.g. FuzzyPipeline's members table — one row per source row by
     * construction): the final labeling join then skips its `.distinct()`,
     * which on a corpus-sized vertex set is a full exchange + hash
     * aggregation spent re-proving uniqueness (guide §2.4: a distinct on
     * data that is already unique is an accidental shuffle). Output is
     * identical for any input that satisfies the promise.
+    *
+    * `maxBroadcastEndpoints` gates the per-iteration broadcast label joins;
+    * ClusterSpec drives it to 0 to pin the shuffle-join regime that
+    * production only enters beyond 2M edge endpoints.
     */
-  private[graft] def connectedComponentsReleasable(
+  private[graft] def components(
       vertices: DataFrame,
       edges: DataFrame,
+      scratch: Scratch,
+      verticesDistinct: Boolean = false,
       maxIter: Int = 25,
-      maxBroadcastEndpoints: Long = 2000000L,
-      verticesDistinct: Boolean = false): (DataFrame, Int, () => Unit) = {
+      maxBroadcastEndpoints: Long = 2000000L): (DataFrame, Int) = {
     // hash-partition the STATIC edge table by the join key once, before
     // its checkpoint: Dataset.localCheckpoint preserves outputPartitioning
     // in the LogicalRDD, so every iteration's neighbor join reuses it and
@@ -249,7 +230,8 @@ object Cluster {
       .join(labels.unionByName(pairLabels), Seq("id"), "left")
       .select(col("id"), coalesce(col("component"), col("id")).as("component"))
     freeCheckpoint(residual)
-    val finalGen = gen
-    (out, iter, () => { freeCheckpoint(finalGen); freeCheckpoint(pairLabels) })
+    scratch.track(gen)
+    scratch.track(pairLabels)
+    (out, iter)
   }
 }

@@ -33,24 +33,15 @@ object FindStage {
     * gram-size cascade LARGEST FIRST, a probe falling through to the next
     * size only when nothing passed at this one (Simple.hs:176-186).
     *
-    * `broadcastProbes` (default true) is the lookup arm ([[lookup]]): the
-    * probes are COLLECTED to the driver and scored map-side against a
-    * broadcast probe index, and the call runs its jobs at once and returns
-    * a local DataFrame. Pass false for probe sets too large for the
-    * driver: the lazy postings-join cascade then scores them as a bulk
-    * join.
+    * The probes are COLLECTED to the driver and scored map-side against a
+    * broadcast probe index ([[lookup]]); the call runs its jobs at once and
+    * returns a local DataFrame.
     */
-  def findMin(
-      probes: DataFrame,
-      idx: IndexTables,
-      minScore: Double,
-      broadcastProbes: Boolean = true): DataFrame =
-    if (broadcastProbes)
-      probes.sparkSession.createDataFrame(
-        java.util.Arrays.asList(lookup(probes, idx, minScore): _*), ResultSchema)
-    else joinFind(probes, idx, minScore)
+  def findMin(probes: DataFrame, idx: IndexTables, minScore: Double): DataFrame =
+    probes.sparkSession.createDataFrame(
+      java.util.Arrays.asList(lookup(probes, idx, minScore): _*), ResultSchema)
 
-  /** The lookup arm of [[findMin]] as driver-side result rows.
+  /** [[findMin]] as driver-side result rows.
     *
     *  - The probes are collected and deduplicated by lowercased key; every
     *    query id answers from its key's results.
@@ -132,66 +123,18 @@ object FindStage {
     } finally bc.destroy()
   }
 
-  /** The bulk arm of [[findMin]] (`broadcastProbes = false`): the lazy
-    * postings-join cascade over a distributed probe set.
-    */
-  private def joinFind(probes: DataFrame, idx: IndexTables, minScore: Double): DataFrame = {
-    val p = probes
-      .select(col("query_id").cast("string").as("query_id"), col("query"))
-      .withColumn("qkey", lower(col("query")))
-
-    val exact = p
-      .join(idx.items.select(col("key").as("qkey"), col("original")), Seq("qkey"))
-      .select(col("query_id"), lit(1.0).as("score"), col("original").as("matched"),
-        lit(0).as("gram_size"))
-
-    val rest = p
-      .join(idx.items.select(col("key").as("qkey")), Seq("qkey"), "left_anti")
-      .select("query_id", "qkey")
-
-    val fuzzy = cascade(rest, idx, minScore, excludeSelf = false) { (remaining, n) =>
-      // map-side gram counts (GramCountsExpr) — no groupBy per probe
-      remaining
-        .select(col("query_id"), explode(gf.gramCounts(col("qkey"), n)).as("e"))
-        .select(col("query_id"), col("e.gram").as("gram"), col("e.cnt").as("qcnt"))
-    }
-    exact.unionByName(fuzzy.drop("matched_id"))
-  }
-
   /** Corpus self-matching with FULL reference fidelity — the reference
     * pipeline verbatim as a distributed postings self-join (SURVEY §3.2):
     * every item probes the whole index through the inverted-index equi-join,
     * top-50 crowding and all; the item itself participates in ranking (it
     * occupies a top-50 slot, exactly as a self-query would) but is excluded
-    * from the returned edges. Quadratic in postings collisions — correct at
-    * any scale but the frequent-gram bomb (SURVEY §7.4) makes it the
-    * small-corpus / validation path; `verifyPairs` over LSH candidates is
-    * the 10^12 path.
+    * from the returned edges AFTER ranking, and an item falls through to
+    * the next gram size if only its self-match passed. Quadratic in
+    * postings collisions — correct at any scale but the frequent-gram bomb
+    * (SURVEY §7.4) makes it the small-corpus / validation path;
+    * `verifyPairs` over LSH candidates is the 10^12 path.
     */
   def selfFindEdges(idx: IndexTables, minScore: Double): DataFrame = {
-    val probes = idx.items.select(col("item_id").as("query_id"), col("key").as("qkey"))
-    cascade(probes, idx, minScore, excludeSelf = true) { (remaining, n) =>
-      idx.postings
-        .filter(col("gram_size") === n)
-        .select(col("item_id").as("query_id"), col("gram"), col("cnt").as("qcnt"))
-        .join(remaining.select("query_id"), Seq("query_id"), "left_semi")
-    }.select(col("query_id").as("a_id"), col("matched_id").as("b_id"),
-      lit("fuzzy").as("kind"), col("score"))
-  }
-
-  /** Postings-join gram-size cascade. qgrams(remaining, n) must yield
-    * (query_id, gram, qcnt) for the still-unresolved probes. Emits
-    * (query_id, score, matched, matched_id, gram_size); when excludeSelf,
-    * matches with item_id == query_id are dropped AFTER ranking (they still
-    * crowd the top-50, as in a true self-query) and a probe falls through
-    * to the next size if only its self-match passed.
-    */
-  private def cascade(
-      probes: DataFrame,
-      idx: IndexTables,
-      minScore: Double,
-      excludeSelf: Boolean
-  )(qgrams: (DataFrame, Int) => DataFrame): DataFrame = {
     val conf = idx.conf
 
     // SMALL-CORPUS SPREAD (guide §2: shuffles are sized by bytes, this work
@@ -218,12 +161,16 @@ object FindStage {
           "left_anti")
       }
 
-    var remaining = probes
+    var remaining = idx.items.select(col("item_id").as("query_id"), col("key").as("qkey"))
     var acc: Option[DataFrame] = None
 
     val lastSize = conf.sizesDesc.last
     for (n <- conf.sizesDesc) {
-      val qg = qgrams(remaining, n)
+      // the still-unresolved probes' own gram counts
+      val qg = idx.postings
+        .filter(col("gram_size") === n)
+        .select(col("item_id").as("query_id"), col("gram"), col("cnt").as("qcnt"))
+        .join(remaining.select("query_id"), Seq("query_id"), "left_semi")
       val qnorm = qg.groupBy("query_id").agg(sqrt(sum(col("qcnt") * col("qcnt"))).as("qmag"))
 
       val dots = qg
@@ -239,7 +186,7 @@ object FindStage {
         .withColumn("cosine", col("dot") / (col("qmag") * col("magnitude")))
 
       val withKeys = cos
-        .join(idx.items.select(col("item_id"), col("key"), col("original")), Seq("item_id"))
+        .join(idx.items.select(col("item_id"), col("key")), Seq("item_id"))
         .join(remaining, Seq("query_id"))
       val scored =
         if (conf.useLevenshtein) {
@@ -253,11 +200,9 @@ object FindStage {
             .withColumn("score", gf.levNormSim(col("qkey"), col("key")))
         } else withKeys.withColumn("score", col("cosine"))
 
-      val passed = scored.filter(col("score") >= minScore)
-      val foundRaw =
-        (if (excludeSelf) passed.filter(col("item_id") =!= col("query_id")) else passed)
-          .select(col("query_id"), col("score"), col("original").as("matched"),
-            col("item_id").as("matched_id"), lit(n).as("gram_size"))
+      val foundRaw = scored
+        .filter(col("score") >= minScore && col("item_id") =!= col("query_id"))
+        .select(col("query_id"), col("item_id").as("matched_id"), col("score"))
       // Materialize each non-final size's matches ONCE (lazy, serialized
       // blocks): `found` feeds the result union AND — via the `remaining`
       // anti-join — both the next size's gram derivation and its probe
@@ -274,7 +219,8 @@ object FindStage {
       acc = Some(acc.map(_.unionByName(found)).getOrElse(found))
       remaining = remaining.join(found.select("query_id").distinct(), Seq("query_id"), "left_anti")
     }
-    acc.get.select("query_id", "score", "matched", "matched_id", "gram_size")
+    acc.get.select(col("query_id").as("a_id"), col("matched_id").as("b_id"),
+      lit("fuzzy").as("kind"), col("score"))
   }
 
   /** Postings restricted to ids appearing on either side of the candidate

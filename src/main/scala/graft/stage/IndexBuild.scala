@@ -28,11 +28,11 @@ final case class IndexTables(
     sigs: DataFrame, // (item_id, sig: array<long>, simhash: long, band_hashes: array<long>)
     bands: DataFrame, // (item_id, band_key: long)
     // When > 0, the corpus is PROVABLY SMALL (leaf-stats gate in
-    // FuzzyPipeline): the postings-join cascade may spread its
+    // FuzzyPipeline): the postings-join self-find may spread its
     // compute-dense posting scans over this many partitions by an explicit
     // exchange. The cost of that exchange is bounded by the small-input
     // gate; a corpus-scale index keeps 0 and its postings are never
-    // repartitioned. Lookups never read postings. See FindStage.cascade.
+    // repartitioned. Lookups never read postings. See FindStage.selfFindEdges.
     spreadParallelism: Int = 0
 ) {
 

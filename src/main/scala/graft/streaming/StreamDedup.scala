@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.conf.FuzzyConf
 import graft.io.TableIO
-import graft.stage.{Candidates, Cluster, FindStage, IndexBuild, IndexTables}
+import graft.stage.{Candidates, Cluster, FindStage, IndexBuild, IndexTables, Scratch}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -42,7 +42,7 @@ import org.apache.spark.storage.StorageLevel
   * exact + LSH/SimHash near-dups as clips arrive; a scheduled
   * FuzzyPipeline run (checkpointed, resumable) compacts and adds the
   * substring edges. Union-over-batches pair coverage vs the batch
-  * fusedPairs is argued at [[Candidates.incrementalPairs]]; label
+  * fusedPairs is argued at [[Candidates.incrementalPairsFromKeys]]; label
   * equality of the two paths on substring-free corpora is pinned by
   * StreamDedupSpec.
   */
@@ -260,7 +260,7 @@ object StreamDedup {
       .unionByName(newKeys.select("bkey", "ktype", "item_id", "sh"))
 
     label("candidate pairs")
-    val scratch = new graft.stage.Scratch()
+    val scratch = new Scratch()
     val pairs = Candidates
       .incrementalPairsFromKeys(newKeys, allKeys, maxHamming = 3, conf.maxSaltedBucket, scratch)
       .localCheckpoint(false, StorageLevel.MEMORY_AND_DISK_SER)
@@ -401,12 +401,13 @@ object StreamDedup {
     */
   def labelsReleasable(spark: SparkSession, stateDir: String): (DataFrame, () => Unit) = {
     val vertices = spark.read.parquet(s"$stateDir/members").select(col("clip_id").as("id"))
-    val (labeled, _, release) = Cluster.connectedComponentsReleasable(
-      vertices, edges(spark, stateDir).select("a_id", "b_id"))
+    val ccScratch = new Scratch
+    val (labeled, _) = Cluster.components(
+      vertices, edges(spark, stateDir).select("a_id", "b_id"), ccScratch)
     val out = labeled
       .select(col("id").as("clip_id"), col("component"))
       .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
-    release()
+    ccScratch.release()
     (out, () => org.apache.spark.sql.GraftColumnBridge.checkpointedRdd(out)
       .foreach(_.unpersist(blocking = false)))
   }

@@ -484,7 +484,7 @@ class FuzzyPipelineSpec extends AnyFunSuite with Matchers {
     // every block source in ckpt-dir mode has a release path: stage tables
     // are parquet (no blocks), branch matSer blocks free after the edges
     // write, stage scratch frees after the branches, CC loop generations
-    // free in-loop and the survivors through the release hook. Net block
+    // free in-loop and the survivors through the CC scratch. Net block
     // count must return to baseline — the long-lived-driver invariant at
     // 10^12 scale, and the regression pin for any future leak.
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-blocks").toString

@@ -1,6 +1,8 @@
 package graft.stage
 
 import graft.SparkTestSession
+import graft.conf.FuzzyConf
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -11,30 +13,29 @@ class CandidatesSpec extends AnyFunSuite with Matchers {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
+  /** (bkey, ktype = 0, item_id, sh = 0): band-key buckets of the given sizes. */
   private def bandsDF(bucketSizes: Map[String, Int]) =
     bucketSizes.toSeq
-      .flatMap { case (key, n) => (0 until n).map(i => (key, f"${key}_i$i%06d")) }
-      .toDF("bkey", "item_id")
+      .flatMap { case (key, n) => (0 until n).map(i => (key, 0, f"${key}_i$i%06d", 0L)) }
+      .toDF("bkey", "ktype", "item_id", "sh")
+
+  private def selfPairs(keyed: DataFrame, cap: Int, saltChunk: Int, maxSalted: Int) =
+    Candidates.taggedSelfPairs(keyed, cap, saltChunk, maxSalted, maxHamming = 0)
+      .as[(String, String)].collect()
 
   test("salted hot buckets produce EXACTLY the all-pairs set of the direct join") {
     // 300-member bucket is above cap=100 -> salted regime; 40-member bucket
     // stays direct; the union must equal the unsalted all-pairs ground truth
     val keyed = bandsDF(Map("hot" -> 300, "small" -> 40, "single" -> 1))
-    val salted = Candidates
-      .bucketSelfPairs(keyed, cap = 100, saltChunk = 32, maxSalted = 4096)
-      .as[(String, String)].collect().toSet
-    val direct = Candidates
-      .bucketSelfPairs(keyed, cap = 1000000, saltChunk = 32, maxSalted = 4096)
-      .as[(String, String)].collect().toSet
+    val salted = selfPairs(keyed, cap = 100, saltChunk = 32, maxSalted = 4096).toSet
+    val direct = selfPairs(keyed, cap = 1000000, saltChunk = 32, maxSalted = 4096).toSet
     salted.size shouldBe (300 * 299 / 2 + 40 * 39 / 2)
     salted shouldBe direct
   }
 
   test("buckets beyond maxSaltedBucket switch to the star regime; others unaffected") {
     val keyed = bandsDF(Map("flood" -> 600, "ok" -> 5))
-    val pairs = Candidates
-      .bucketSelfPairs(keyed, cap = 100, saltChunk = 32, maxSalted = 500)
-      .as[(String, String)].collect()
+    val pairs = selfPairs(keyed, cap = 100, saltChunk = 32, maxSalted = 500)
     val (floodPairs, okPairs) = pairs.partition(_._1.startsWith("flood"))
     okPairs.length shouldBe 5 * 4 / 2
     // star: exactly one candidate per non-min member, all anchored at the
@@ -45,40 +46,53 @@ class CandidatesSpec extends AnyFunSuite with Matchers {
   }
 
   test("a pair never duplicates across the salted join (a<b once per bucket)") {
-    val keyed = bandsDF(Map("hot" -> 150))
-    val pairs = Candidates
-      .bucketSelfPairs(keyed, cap = 100, saltChunk = 16, maxSalted = 4096)
-      .as[(String, String)].collect()
+    val pairs = selfPairs(bandsDF(Map("hot" -> 150)), cap = 100, saltChunk = 16, maxSalted = 4096)
     pairs.length shouldBe pairs.toSet.size
     pairs.length shouldBe 150 * 149 / 2
   }
 
-  test("fusedPairs emits exactly lshPairs UNION simhashPairs") {
-    import graft.conf.FuzzyConf
+  test("fusedPairs == brute force: a shared band value, or SimHash hamming <= 3") {
     val conf = FuzzyConf()
     val clips = graft.audio.ClipSynth.table(spark, 3000, includeAudio = false)
     val idx = graft.stage.IndexBuild(clips, "clip_id", "transcript", conf)
     val sigs = idx.sigs.cache()
+    val rows = sigs.select("item_id", "simhash", "band_hashes")
+      .as[(String, Long, Seq[Long])].collect()
+
+    // fixture: no band or chunk bucket reaches the salted regime, so every
+    // colliding pair is a candidate and the reference needs no skew rules
+    val maxBucket = Candidates.fusedKeyed(sigs).groupBy("bkey", "ktype").count()
+      .agg(org.apache.spark.sql.functions.max("count")).as[Long].head()
+    maxBucket should be <= conf.maxBandBucket.toLong
+
+    def ordered(a: String, b: String) = if (a < b) (a, b) else (b, a)
+    val byBand = rows
+      .flatMap { case (id, _, bands) => bands.distinct.map(_ -> id) }
+      .groupBy(_._1).values.map(_.map(_._2))
+    val bandPairs =
+      byBand.flatMap(ids => ids.combinations(2).map { case Array(a, b) => ordered(a, b) })
+    val hammingPairs = for {
+      i <- rows.indices.iterator
+      j <- (i + 1 until rows.length).iterator
+      if java.lang.Long.bitCount(rows(i)._2 ^ rows(j)._2) <= 3
+    } yield ordered(rows(i)._1, rows(j)._1)
+    val reference = bandPairs.toSet ++ hammingPairs
+
     val fused = Candidates
       .fusedPairs(sigs, 3, conf.maxBandBucket, conf.saltChunk, conf.maxSaltedBucket)
       .as[(String, String)].collect().toSet
-    val separate =
-      Candidates.lshPairs(idx.bands, conf.maxBandBucket, conf.saltChunk, conf.maxSaltedBucket)
-        .as[(String, String)].collect().toSet ++
-        Candidates.simhashPairs(sigs, 3, conf.maxBandBucket, conf.saltChunk, conf.maxSaltedBucket)
-          .as[(String, String)].collect().toSet
-    fused shouldBe separate
+    fused shouldBe reference
     fused should not be empty // planted dups guarantee collisions
     sigs.unpersist()
   }
 
   test("union of per-batch incrementalPairs == fusedPairs over the full corpus") {
-    import graft.conf.FuzzyConf
     val conf = FuzzyConf()
     // 3000 synthetic clips with planted dups; no bucket approaches the
     // caps, so both paths run their direct regimes and the pair SETS must
     // be exactly equal — the incremental union-over-batches coverage
-    // argument (Candidates.incrementalPairs scaladoc) as a concrete check
+    // argument (Candidates.incrementalPairsFromKeys scaladoc) as a concrete
+    // check
     val clips = graft.audio.ClipSynth.table(spark, 3000, includeAudio = false)
     val idx = graft.stage.IndexBuild(clips, "clip_id", "transcript", conf)
     val sigs = idx.sigs.cache()
@@ -86,11 +100,11 @@ class CandidatesSpec extends AnyFunSuite with Matchers {
     import org.apache.spark.sql.functions.{abs => fAbs, col, xxhash64}
     val firstBatch = sigs.filter(fAbs(xxhash64(col("item_id"))) % 3 < 2).cache()
     val secondNew = sigs.filter(fAbs(xxhash64(col("item_id"))) % 3 === 2)
-    val incremental =
-      Candidates.incrementalPairs(firstBatch, firstBatch, 3, conf.maxSaltedBucket)
-        .as[(String, String)].collect().toSet ++
-        Candidates.incrementalPairs(secondNew, sigs, 3, conf.maxSaltedBucket)
-          .as[(String, String)].collect().toSet
+    def pairs(newSigs: DataFrame, allSigs: DataFrame) = Candidates
+      .incrementalPairsFromKeys(Candidates.fusedKeyed(newSigs), Candidates.fusedKeyed(allSigs),
+        3, conf.maxSaltedBucket)
+      .as[(String, String)].collect().toSet
+    val incremental = pairs(firstBatch, firstBatch) ++ pairs(secondNew, sigs)
     val batch = Candidates
       .fusedPairs(sigs, 3, conf.maxBandBucket, conf.saltChunk, conf.maxSaltedBucket)
       .as[(String, String)].collect().toSet
@@ -192,17 +206,28 @@ class CandidatesSpec extends AnyFunSuite with Matchers {
     got shouldBe oracle
   }
 
-  test("simhashPairs with salting still finds hamming<=3 neighbors in a hot chunk bucket") {
-    // 120 fingerprints sharing chunk 0 (low 15 bits identical) -> one hot
+  test("salted SimHash chunk buckets keep every hamming<=3 pair") {
+    // 120 fingerprints sharing chunk 0 (low 15 bits identical) -> a hot
     // bucket above cap=50; planted neighbor pair differs in 2 high bits
     val base = 0x1234L
-    val sigs = ((0 until 118).map { i =>
+    val sigs = (0 until 118).map { i =>
       (f"r$i%04d", base | ((i.toLong + 7) << 20)) // far apart in high bits
-    } :+ ("pairA0", base | (1L << 50)) :+ ("pairB0", base | (1L << 50) | (1L << 58)))
-      .toDF("item_id", "simhash")
+    } :+ ("pairA0", base | (1L << 50)) :+ ("pairB0", base | (1L << 50) | (1L << 58))
+    // the four 15-bit chunk keys of each fingerprint (FusedKeysExpr layout)
+    def chunkKey(sh: Long, c: Int) = ((sh >>> (15 * c)) & 0x7fffL) + (c.toLong << 15)
+    val keyed = sigs
+      .flatMap { case (id, sh) => (0 until 4).map(c => (chunkKey(sh, c), 1, id, sh)) }
+      .toDF("bkey", "ktype", "item_id", "sh")
+    keyed.filter($"bkey" === base).count() shouldBe 120L // fixture: chunk 0 is hot
     val got = Candidates
-      .simhashPairs(sigs, maxHamming = 3, maxBandBucket = 50, saltChunk = 16, maxSaltedBucket = 4096)
+      .taggedSelfPairs(keyed, cap = 50, saltChunk = 16, maxSalted = 4096, maxHamming = 3)
       .as[(String, String)].collect().toSet
     got should contain(("pairA0", "pairB0"))
+    // every fingerprint shares chunk 0, so the candidates are exactly the
+    // pairs within hamming distance 3
+    got shouldBe (for {
+      (a, x) <- sigs; (b, y) <- sigs
+      if a < b && java.lang.Long.bitCount(x ^ y) <= 3
+    } yield (a, b)).toSet
   }
 }

@@ -3,7 +3,7 @@ package graft.stage
 import graft.SparkTestSession
 import graft.api.FuzzyPipeline
 import graft.conf.FuzzyConf
-import graft.text.FuzzySetRef
+import graft.text.{FuzzySetRef, Gram}
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
@@ -15,9 +15,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
-/** The lookup arm of `findMin` (`broadcastProbes = true`: probes scored
-  * map-side against a broadcast probe index) against the in-memory
-  * reference, the postings-join arm, and its job budget.
+/** `findMin` (probes scored map-side against a broadcast probe index)
+  * against the in-memory reference, a stop-list-aware scorer, and its job
+  * budget.
   */
 class FindLookupSpec extends AnyFunSuite with Matchers {
   private lazy val spark = SparkTestSession.spark
@@ -117,16 +117,62 @@ class FindLookupSpec extends AnyFunSuite with Matchers {
     rows(p.findMin(0.33, probesDF(probes))) shouldBe expected
   }
 
-  test("with a tiny stop-list threshold the lookup arm == the postings-join arm row for row") {
+  /** The lookup's rows for one probe, scored directly over `corpus` with
+    * the stop-list `stop` applied: dot products over the grams not in
+    * `stop(n)`, full magnitudes, the top `topKRerank` by (cosine desc, key
+    * asc), the Levenshtein rerank, minScore, and the size cascade.
+    */
+  private def stopListOracle(
+      corpus: Seq[String],
+      stop: Map[Int, Set[String]],
+      conf: FuzzyConf,
+      q: String,
+      query: String,
+      minScore: Double): Seq[Key] = {
+    val lower = (s: String) => s.toLowerCase(java.util.Locale.ROOT)
+    val items = corpus.map(o => lower(o) -> o).distinctBy(_._1) // first writer wins
+    val k = lower(query)
+    items.find(_._1 == k) match {
+      case Some((_, original)) => Seq(key(q, 1.0, original, 0))
+      case None =>
+        conf.sizesDesc.iterator.map { n =>
+          val qv = Gram.gramVector(k, n)
+          val qmag = Gram.norm(qv.values)
+          val stopN = stop.getOrElse(n, Set.empty[String])
+          val cosines = items.flatMap { case (ikey, original) =>
+            val iv = Gram.gramVector(ikey, n)
+            val dot = qv.iterator.filterNot(g => stopN(g._1)).map { case (g, c) =>
+              c.toLong * iv.getOrElse(g, 0)
+            }.sum
+            if (dot == 0) None else Some((dot / (qmag * Gram.norm(iv.values)), ikey, original))
+          }
+          val scored =
+            if (conf.useLevenshtein)
+              cosines.sortBy { case (c, ikey, _) => (-c, ikey) }.take(conf.topKRerank)
+                .map { case (_, ikey, original) => (Gram.levenshteinNorm(k, ikey), original) }
+            else cosines.map { case (c, _, original) => (c, original) }
+          scored.filter(_._1 >= minScore).map { case (s, original) => key(q, s, original, n) }
+        }.find(_.nonEmpty).getOrElse(Nil)
+    }
+  }
+
+  test("with a tiny stop-list threshold the lookup == a stop-list-aware scorer") {
     val conf = FuzzyConf(maxPostingsPerGram = 2)
     val p = FuzzyPipeline(spark, corpusDF(states), "clip_id", "transcript", conf)
-    p.index.stopGrams.values.map(_.size).sum should be > 0
-    val probes = probesDF(Seq(
+    val stop = p.index.stopGrams
+    stop.values.map(_.size).sum should be > 0
+    val probes = Seq(
       "Burger Islands", "Connect a cat", "Transylvania", "Alaskanbraskansas",
-      "washing tun", "ia", "new jersey", "North Dakotas"))
-    val local = rows(p.findMin(0.33, probes))
-    local should not be empty
-    local shouldBe rows(p.findMin(0.33, probes, broadcastProbes = false))
+      "washing tun", "ia", "new jersey", "North Dakotas")
+    def expected(stop: Map[Int, Set[String]]) = probes.zipWithIndex.flatMap { case (pr, i) =>
+      stopListOracle(states, stop, conf, s"q$i", pr, 0.33)
+    }.sorted
+    // fixture: the stop-list changes the answer, so a lookup that ignored
+    // it could not pass
+    expected(stop) should not be expected(Map.empty)
+    val got = rows(p.findMin(0.33, probesDF(probes)))
+    got should not be empty
+    got shouldBe expected(stop)
   }
 
   test("a warmed 6-probe lookup runs at most 8 jobs and never aggregates postings again") {
