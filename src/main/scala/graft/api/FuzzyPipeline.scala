@@ -39,13 +39,13 @@ final case class FuzzyPipeline(
   private val hash = TableIO.confHash((conf, idCol, textCol))
 
   /** Stages that are pure map-side projections of an already-materialized
-    * parent (postings/norms explode from items via GramCountsExpr, bands
-    * from sigs): storing them buys nothing — recompute is a cheap parallel
-    * map — and at bench scale the stored posting rows (|corpus| x |grams|)
-    * caused enough memory pressure that 32 cores ran SLOWER than 8.
+    * parent (postings/norms explode from items via GramCountsExpr): storing
+    * them buys nothing — recompute is a cheap parallel map — and at bench
+    * scale the stored posting rows (|corpus| x |grams|) caused enough
+    * memory pressure that 32 cores ran SLOWER than 8.
     * They are still written in checkpoint-dir mode (resume contract).
     */
-  private val mapSideStages = Set("postings", "norms", "bands")
+  private val mapSideStages = Set("postings", "norms")
 
   private def ckpt(name: String)(df: => DataFrame): DataFrame =
     checkpointDir match {
@@ -70,31 +70,13 @@ final case class FuzzyPipeline(
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     }
 
-  /** The six index tables (SURVEY.md §1.2); each stage materializes through
+  /** The five index tables (SURVEY.md §1.2); each stage materializes through
     * `ckpt` and downstream stages consume the MATERIALIZED table (see
     * IndexBuild scaladoc — deriving from pre-materialization plans would
     * recompute the upstream lineage once per table).
     */
   lazy val index: IndexTables =
-    IndexBuild(input, idCol, textCol, conf, (stage, df) => ckpt(stage)(df),
-      spreadParallelism = smallCorpusSpread)
-
-  /** Below this optimizer-estimated input size the corpus counts as SMALL
-    * and compute-dense posting scans may be spread over cluster width by an
-    * explicit exchange (FindStage.selfFindEdges): AQE coalesces their
-    * byte-tiny shuffles to 1-2 partitions while the per-row work (gram join
-    * fanout, Levenshtein) is CPU-dense, serializing seconds of compute onto
-    * one core. The exchange's cost is bounded by this gate; inputs with
-    * UNKNOWN stats (typed Dataset maps — stats default to huge) and real
-    * corpora keep 0 and the query plans are unchanged.
-    */
-  private val smallCorpusSpreadBytes = 64L << 20
-  private def smallCorpusSpread: Int = {
-    val est =
-      try input.queryExecution.optimizedPlan.stats.sizeInBytes
-      catch { case scala.util.control.NonFatal(_) => BigInt(Long.MaxValue) }
-    if (est <= smallCorpusSpreadBytes) spark.sparkContext.defaultParallelism else 0
-  }
+    IndexBuild(input, idCol, textCol, conf, (stage, df) => ckpt(stage)(df))
 
   // ---- reference query API (Simple.hs) ---------------------------------
 
@@ -348,17 +330,19 @@ final case class FuzzyPipeline(
   private var lastEdgeBranches: Seq[DataFrame] = Nil
 
   /** Verified duplicate edges with FULL reference fidelity — every item
-    * probes the whole index through the inverted-index join exactly as the
-    * reference's `getMatches` would (top-50 crowding, size cascade, self
-    * occupying a rank slot). Bit-identical to the in-memory oracle; cost is
-    * quadratic in frequent-gram collisions, so this is the validation /
-    * small-corpus mode — `dedupEdges` is the scale path.
+    * key probes the whole index through the lookups' own scoring pass,
+    * exactly as the reference's `getMatches` would (top-50 crowding, size
+    * cascade, self occupying a rank slot; FindStage.selfFindEdges).
+    * Bit-identical to the in-memory oracle. Validation / small-corpus mode:
+    * quadratic in the corpus, and every item key is collected to the
+    * driver — `dedupEdges` is the scale path.
     */
   def dedupEdgesExhaustive(): DataFrame = exhaustiveMemo
-  private lazy val exhaustiveMemo: DataFrame = {
-    val exact = Candidates.exactEdges(index.members)
-    val fuzzy = FindStage.selfFindEdges(index, conf.minScore)
-    ckpt("edges_exhaustive")(exact.unionByName(fuzzy))
+  // the self-find runs its jobs when called, so it lives inside the by-name
+  // ckpt block: a checkpoint-dir resume re-reads the stored edges without it
+  private lazy val exhaustiveMemo: DataFrame = ckpt("edges_exhaustive") {
+    Candidates.exactEdges(index.members)
+      .unionByName(FindStage.selfFindEdges(index, conf.minScore))
   }
 
   /** (clip_id, component): every source row labeled with the min clip_id of

@@ -21,7 +21,6 @@ package graft.conf
   * @param minScore       drop results scoring below this (`Simple.hs:226`)
   * @param topKRerank     cosine candidates kept per query before the
   *                       Levenshtein rerank (`Internal.hs:90` - take 50)
-  * @param minhashHashes  number of MinHash permutations (= bands * rowsPerBand)
   * @param minhashBands   LSH band count
   * @param rowsPerBand    MinHash rows per band; candidate-probability curve
   *                       is 1 - (1 - j^r)^b for Jaccard j. Defaults b=21,
@@ -52,9 +51,10 @@ package graft.conf
   *                       are pruned by verification at |bucket| cost
   *                       (Candidates.taggedSelfPairs scaladoc)
   * @param maxPostingsPerGram stop-list threshold: grams whose document
-  *                       frequency exceeds this are dropped from the
-  *                       candidate join (they only add quadratic pairs);
-  *                       verification still uses full gram vectors
+  *                       frequency exceeds this are left out of find
+  *                       scoring's dot products (IndexTables.stopGrams);
+  *                       magnitudes and verification still use full gram
+  *                       vectors
   * @param sigGateMinJaccard MinHash-estimated Jaccard below which a
   *                       candidate pair is dropped before the scoring
   *                       joins (FindStage.verifyPairs). The default 0.3
@@ -74,7 +74,6 @@ final case class FuzzyConf(
     useLevenshtein: Boolean = true,
     minScore: Double = 0.33,
     topKRerank: Int = 50,
-    minhashHashes: Int = 126,
     minhashBands: Int = 21,
     rowsPerBand: Int = 6,
     seed: Long = 42L,
@@ -88,10 +87,10 @@ final case class FuzzyConf(
 ) {
   require(gramLo >= 2, "gram size must be at least 2 (Internal.hs:193)")
   require(gramHi >= gramLo, "gramHi must be >= gramLo")
-  require(
-    minhashBands * rowsPerBand == minhashHashes,
-    "minhashHashes must equal minhashBands * rowsPerBand"
-  )
+
+  /** Number of MinHash permutations: every one of them feeds a band. */
+  def minhashHashes: Int = minhashBands * rowsPerBand
+
   /** Gram sizes in query-cascade order: upper bound first (Simple.hs:181). */
   def sizesDesc: Seq[Int] = gramHi.to(gramLo, -1)
   def sizes: Seq[Int] = gramLo to gramHi

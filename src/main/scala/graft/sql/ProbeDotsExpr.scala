@@ -62,7 +62,7 @@ object ProbeIndex {
   *
   * cosine = dot / (probe magnitude * item magnitude) with integer dots and
   * squared sums, divided in double at the end: the same doubles as the
-  * reference and the postings-join cascade, under any partitioning.
+  * reference, under any partitioning.
   *
   * The per-row accumulators are reused across rows: an expression instance
   * is evaluated by one task thread at a time.

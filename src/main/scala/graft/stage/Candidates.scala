@@ -186,7 +186,7 @@ object Candidates {
     * UNKNOWN stats (checkpointed RDDs — the flagship/stream shape) default
     * to huge and take the materialized arm; parquet-backed query inputs
     * report real (small) stats and keep the old plan. Same gate pattern as
-    * the small-corpus spread (Queries.spreadSmall / FuzzyPipeline).
+    * the small-input spread (Queries.spreadSmall).
     */
   private val substrMatMinBytes = 64L << 20
   private def substrLazy(items: DataFrame): Boolean = {

@@ -26,6 +26,13 @@ object FindStage {
     StructField("matched", StringType),
     StructField("gram_size", IntegerType, nullable = false)))
 
+  /** (a_id, b_id, kind, score): the edge schema of [[selfFindEdges]]. */
+  private val EdgeSchema: StructType = StructType(Seq(
+    StructField("a_id", StringType),
+    StructField("b_id", StringType),
+    StructField("kind", StringType, nullable = false),
+    StructField("score", DoubleType, nullable = false)))
+
   /** Probe-mode findMin. probes: (query_id, query). Returns
     * (query_id, score, matched, gram_size); gram_size 0 = exact pass.
     *
@@ -73,8 +80,8 @@ object FindStage {
     var pending = keys.filterNot(hits.contains)
     for (n <- idx.conf.sizesDesc) {
       if (pending.nonEmpty) {
-        scorePass(pending, idx, n, minScore).groupBy(_._1).foreach { case (p, ms) =>
-          hits(pending(p)) = ms.map { case (_, score, matched) => (score, matched, n) }.toSeq
+        scorePass(pending, idx, n, minScore, idx.items).groupBy(_._1).foreach { case (p, ms) =>
+          hits(pending(p)) = ms.map { case (_, score, _, matched) => (score, matched, n) }.toSeq
         }
         pending = pending.filterNot(hits.contains)
       }
@@ -86,23 +93,26 @@ object FindStage {
     }
   }
 
-  /** One gram size of [[lookup]]: (probe, score, matched) for every match
-    * of `keys(probe)` that passes minScore.
+  /** One gram size of a find: (probe, score, item_id, original) for every
+    * row of `items` (item_id, key, original) that matches `keys(probe)` and
+    * passes minScore.
     */
   private def scorePass(
       keys: Array[String],
       idx: IndexTables,
       n: Int,
-      minScore: Double): Array[(Int, Double, String)] = {
+      minScore: Double,
+      items: DataFrame): Array[(Int, Double, String, String)] = {
     val conf = idx.conf
     val index = ProbeIndex(keys.toIndexedSeq, n, idx.stopGrams.getOrElse(n, Set.empty))
     if (index.isEmpty) return Array.empty
-    val bc = idx.items.sparkSession.sparkContext.broadcast(index)
+    val bc = items.sparkSession.sparkContext.broadcast(index)
     try {
-      val scored = idx.items
-        .select(col("key"), col("original"), explode(gf.probeDots(col("key"), n, bc)).as("d"))
-        .select(col("d.probe").as("probe"), col("d.cosine").as("cosine"), col("key"),
-          col("original"))
+      val scored = items
+        .select(col("item_id"), col("key"), col("original"),
+          explode(gf.probeDots(col("key"), n, bc)).as("d"))
+        .select(col("d.probe").as("probe"), col("d.cosine").as("cosine"), col("item_id"),
+          col("key"), col("original"))
       val ranked =
         if (conf.useLevenshtein) {
           // take-50 BEFORE the expensive rerank (Internal.hs:90); rerank
@@ -117,110 +127,53 @@ object FindStage {
         } else scored.withColumn("score", col("cosine"))
       ranked
         .filter(col("score") >= minScore)
-        .select("probe", "score", "original")
+        .select("probe", "score", "item_id", "original")
         .collect()
-        .map(r => (r.getInt(0), r.getDouble(1), r.getString(2)))
+        .map(r => (r.getInt(0), r.getDouble(1), r.getString(2), r.getString(3)))
     } finally bc.destroy()
   }
 
-  /** Corpus self-matching with FULL reference fidelity — the reference
-    * pipeline verbatim as a distributed postings self-join (SURVEY §3.2):
-    * every item probes the whole index through the inverted-index equi-join,
-    * top-50 crowding and all; the item itself participates in ranking (it
-    * occupies a top-50 slot, exactly as a self-query would) but is excluded
-    * from the returned edges AFTER ranking, and an item falls through to
-    * the next gram size if only its self-match passed. Quadratic in
-    * postings collisions — correct at any scale but the frequent-gram bomb
-    * (SURVEY §7.4) makes it the small-corpus / validation path;
-    * `verifyPairs` over LSH candidates is the 10^12 path.
+  /** Corpus self-matching with FULL reference fidelity: every item key is
+    * a probe of [[scorePass]], the kernel lookups run, over the whole index
+    * — top-`topKRerank` crowding and the size cascade included. The item
+    * itself takes part in ranking (it holds a top-K slot, exactly as a
+    * self-query would) and is dropped from the edges AFTER ranking; an item
+    * falls through to the next gram size if only its self-match passed.
+    * Items are key-distinct, so there is no probe dedup and no exact
+    * short-circuit.
+    *
+    * Validation path, quadratic BY CONTRACT: every pair sharing a gram is
+    * scored. Every item key is collected to the driver and a probe index
+    * over all of them is broadcast, so the keys and that index must fit on
+    * the driver (the lookup contract); `verifyPairs` over LSH candidates is
+    * the scale path. Runs its jobs at once and returns a local
+    * (a_id, b_id, kind, score) DataFrame.
     */
   def selfFindEdges(idx: IndexTables, minScore: Double): DataFrame = {
-    val conf = idx.conf
+    val spark = idx.items.sparkSession
+    val items = idx.items.select("item_id", "key").filter(col("key").isNotNull).collect()
+    val ids = items.map(_.getString(0))
+    val keys = items.map(_.getString(1))
+    // every key already sits on the driver, so an explicit exchange per
+    // size is cheap next to the scan it spreads: AQE would leave a
+    // byte-small items table in one or two CPU-dense tasks
+    val scan = idx.items.select("item_id", "key", "original")
+      .repartition(spark.sparkContext.defaultParallelism)
 
-    // SMALL-CORPUS SPREAD (guide §2: shuffles are sized by bytes, this work
-    // by CPU): the dots join below fans each posting row out once per probe
-    // sharing its gram — on a dense-vocabulary corpus that is tens of
-    // millions of join+agg operations over a byte-tiny table, and AQE's
-    // size-based coalescing serializes them onto 1-2 tasks (measured 17-33 s
-    // single-task stages on the sf0.1 documents corpus, whose 1.5M gram
-    // occurrences span only 432 distinct trigrams). When the pipeline's
-    // leaf-stats gate certified the corpus small (IndexTables
-    // .spreadParallelism > 0), an explicit round-robin exchange — cost
-    // bounded by the gate — spreads the scan to cluster width.
-    val postingsSrc =
-      if (idx.spreadParallelism > 0) idx.postings.repartition(idx.spreadParallelism)
-      else idx.postings
-    // the index's stop-list grams leave the JOIN only (IndexTables.stopGrams)
-    val stop = for ((n, grams) <- idx.stopGrams.toSeq; g <- grams.toSeq) yield (n, g)
-    val post =
-      if (stop.isEmpty) postingsSrc
-      else {
-        val spark = idx.postings.sparkSession
-        import spark.implicits._
-        postingsSrc.join(broadcast(stop.toDF("gram_size", "gram")), Seq("gram_size", "gram"),
-          "left_anti")
+    val edges = scala.collection.mutable.ArrayBuffer.empty[Row]
+    var pending = keys.indices.toArray // item positions still unresolved
+    for (n <- idx.conf.sizesDesc) {
+      if (pending.nonEmpty) {
+        val found = scorePass(pending.map(keys), idx, n, minScore, scan)
+          .filter { case (p, _, matchedId, _) => matchedId != ids(pending(p)) }
+        found.foreach { case (p, score, matchedId, _) =>
+          edges += Row(ids(pending(p)), matchedId, "fuzzy", score)
+        }
+        val resolved = found.map(_._1).toSet
+        pending = pending.indices.filterNot(resolved).map(pending).toArray
       }
-
-    var remaining = idx.items.select(col("item_id").as("query_id"), col("key").as("qkey"))
-    var acc: Option[DataFrame] = None
-
-    val lastSize = conf.sizesDesc.last
-    for (n <- conf.sizesDesc) {
-      // the still-unresolved probes' own gram counts
-      val qg = idx.postings
-        .filter(col("gram_size") === n)
-        .select(col("item_id").as("query_id"), col("gram"), col("cnt").as("qcnt"))
-        .join(remaining.select("query_id"), Seq("query_id"), "left_semi")
-      val qnorm = qg.groupBy("query_id").agg(sqrt(sum(col("qcnt") * col("qcnt"))).as("qmag"))
-
-      val dots = qg
-        .join(post.filter(col("gram_size") === n).drop("gram_size"), Seq("gram"))
-        .groupBy("query_id", "item_id")
-        .agg(sum(col("qcnt").cast("long") * col("cnt")).as("dot"))
-
-      val inorm = idx.norms.filter(col("gram_size") === n).select(col("item_id"), col("magnitude"))
-      val cos = dots
-        .join(qnorm, Seq("query_id"))
-        .join(inorm, Seq("item_id"))
-        .filter(col("qmag") > 0 && col("magnitude") > 0)
-        .withColumn("cosine", col("dot") / (col("qmag") * col("magnitude")))
-
-      val withKeys = cos
-        .join(idx.items.select(col("item_id"), col("key")), Seq("item_id"))
-        .join(remaining, Seq("query_id"))
-      val scored =
-        if (conf.useLevenshtein) {
-          // take-50 BEFORE the expensive rerank (Internal.hs:90); rerank
-          // compares raw lowercased keys, not gram-normalized text
-          // (Internal.hs:91 — SURVEY §7.4 asymmetry trap)
-          val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("key").asc)
-          withKeys
-            .withColumn("rn", row_number().over(w))
-            .filter(col("rn") <= conf.topKRerank)
-            .withColumn("score", gf.levNormSim(col("qkey"), col("key")))
-        } else withKeys.withColumn("score", col("cosine"))
-
-      val foundRaw = scored
-        .filter(col("score") >= minScore && col("item_id") =!= col("query_id"))
-        .select(col("query_id"), col("item_id").as("matched_id"), col("score"))
-      // Materialize each non-final size's matches ONCE (lazy, serialized
-      // blocks): `found` feeds the result union AND — via the `remaining`
-      // anti-join — both the next size's gram derivation and its probe
-      // join, so without a checkpoint the whole size-n subtree (the dots
-      // join, the window, the rerank) is re-planned and re-executed once
-      // per consumer (profiler: twin 15.5 s stages computing the identical
-      // size-3 pass concurrently on q_audio_dedup). Blocks are match-sized
-      // (probes x top-50 in lev mode), released with the session.
-      val found =
-        if (n == lastSize) foundRaw
-        else foundRaw.localCheckpoint(false,
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-
-      acc = Some(acc.map(_.unionByName(found)).getOrElse(found))
-      remaining = remaining.join(found.select("query_id").distinct(), Seq("query_id"), "left_anti")
     }
-    acc.get.select(col("query_id").as("a_id"), col("matched_id").as("b_id"),
-      lit("fuzzy").as("kind"), col("score"))
+    spark.createDataFrame(java.util.Arrays.asList(edges.toSeq: _*), EdgeSchema)
   }
 
   /** Postings restricted to ids appearing on either side of the candidate

@@ -16,8 +16,12 @@ import org.apache.spark.sql.functions._
   *                   intended semantics: dedup on lower(str), SURVEY §2.1)
   *  - `postings` <-> matchDict (Internal.hs:51): gram -> (item, count)
   *  - `norms`    <-> per-item precomputed magnitudes (Internal.hs:38-41)
-  *  - `sigs`/`bands`: the scale path the reference lacks — MinHash/LSH and
-  *                   SimHash signatures over the gramHi shingle set
+  *  - `sigs`     <-> the scale path the reference lacks: MinHash/LSH band
+  *                   hashes and SimHash signatures over the gramHi shingle set
+  *
+  * Lookups read `items` only (plus `postings` once, for [[stopGrams]]);
+  * the self-find reads `items`; cosine-mode `verifyPairs` reads `postings`
+  * and `norms`; candidate generation reads `sigs`.
   */
 final case class IndexTables(
     conf: FuzzyConf,
@@ -25,26 +29,18 @@ final case class IndexTables(
     members: DataFrame, // (clip_id, item_id)
     postings: DataFrame, // (gram_size, gram, item_id, cnt)
     norms: DataFrame, // (item_id, gram_size, magnitude)
-    sigs: DataFrame, // (item_id, sig: array<long>, simhash: long, band_hashes: array<long>)
-    bands: DataFrame, // (item_id, band_key: long)
-    // When > 0, the corpus is PROVABLY SMALL (leaf-stats gate in
-    // FuzzyPipeline): the postings-join self-find may spread its
-    // compute-dense posting scans over this many partitions by an explicit
-    // exchange. The cost of that exchange is bounded by the small-input
-    // gate; a corpus-scale index keeps 0 and its postings are never
-    // repartitioned. Lookups never read postings. See FindStage.selfFindEdges.
-    spreadParallelism: Int = 0
+    sigs: DataFrame // (item_id, sig: array<long>, simhash: long, band_hashes: array<long>)
 ) {
 
   /** Frequent-gram stop-list (SURVEY §4 O1 / §7.4): per gram size, the
     * grams whose document frequency exceeds `conf.maxPostingsPerGram`.
-    * Such a gram turns the postings equi-join quadratic while carrying
-    * almost no cosine discrimination, so find scoring leaves it out of the
-    * dot products only; magnitudes stay over all grams, so retained grams
-    * score unchanged, and below the threshold behavior is exactly the
-    * reference's. One aggregation over postings per index, on first use,
-    * and none when the threshold is <= 0. The list is bounded by the gram
-    * vocabulary, so it is collected to the driver.
+    * Such a gram makes nearly every pair of keys a nonzero dot product
+    * while carrying almost no cosine discrimination, so find scoring leaves
+    * it out of the dot products only; magnitudes stay over all grams, so
+    * retained grams score unchanged, and below the threshold behavior is
+    * exactly the reference's. One aggregation over postings per index, on
+    * first use, and none when the threshold is <= 0. The list is bounded by
+    * the gram vocabulary, so it is collected to the driver.
     */
   lazy val stopGrams: Map[Int, Set[String]] =
     if (conf.maxPostingsPerGram <= 0) Map.empty
@@ -66,11 +62,11 @@ object IndexBuild {
     * (idCol, textCol) are selected.
     *
     * `mat(stage, df)` materializes each stage table (parquet checkpoint or
-    * localCheckpoint) and its RESULT feeds downstream derivations — bands
-    * build from the materialized sigs, and postings/norms each re-derive
-    * the gram extraction from the materialized ITEMS (both are map-side
-    * projections of items — see FuzzyPipeline.mapSideStages: storing or
-    * chaining them buys nothing, recompute is a cheap parallel map).
+    * localCheckpoint) and its RESULT feeds downstream derivations: members,
+    * postings, norms and sigs all derive from the materialized ITEMS
+    * (postings/norms are map-side projections of items — see
+    * FuzzyPipeline.mapSideStages: storing or chaining them buys nothing,
+    * recompute is a cheap parallel map).
     * Deriving from the pre-materialization plans instead would recompute
     * the whole upstream lineage once per table (localCheckpoint and
     * parquet round-trips, unlike .cache(), do not substitute into
@@ -81,8 +77,7 @@ object IndexBuild {
       idCol: String,
       textCol: String,
       conf: FuzzyConf,
-      mat: (String, DataFrame) => DataFrame = (_, df) => df,
-      spreadParallelism: Int = 0): IndexTables = {
+      mat: (String, DataFrame) => DataFrame = (_, df) => df): IndexTables = {
     val keyed = input
       .select(col(idCol).cast("string").as("clip_id"), col(textCol).as("original"))
       .withColumn("key", lower(col("original")))
@@ -106,15 +101,7 @@ object IndexBuild {
 
     val sigs = mat("sigs", signatures(items, conf))
 
-    // band tokens shuffle as 8-byte longs (mixed from the band's signature
-    // rows), not ~50-char strings: the LSH self-join shuffles |corpus| x
-    // bands rows, so key width dominates shuffle volume and sort-merge
-    // compare cost; a 64-bit collision can only ADD a candidate pair, which
-    // verification filters (same contract as the hash itself)
-    val bands = mat("bands", sigs
-      .select(col("item_id"), explode(col("band_hashes")).as("band_key")))
-
-    IndexTables(conf, items, members, postings, norms, sigs, bands, spreadParallelism)
+    IndexTables(conf, items, members, postings, norms, sigs)
   }
 
   /** Postings + norms as pure map-side projections of an `items` table

@@ -328,14 +328,6 @@ object StreamDedup {
       .foreach(_.unpersist(blocking = false))
   }
 
-  /** The state tables as the batch kernel's IndexTables view, so
-    * verification runs the EXACT batch code path. postings/norms/bands are
-    * the same recompute-on-read projections the batch pipeline uses
-    * (FuzzyPipeline.mapSideStages) — and verifyPairs semi-join-prunes
-    * postings to candidate endpoints before the scan, so the cosine-mode
-    * projections never materialize corpus-wide here either (lev mode, the
-    * default, reads only items + sigs).
-    */
   /** [[stateIndex]] minus the n_members aggregation: the per-batch
     * verification path reads items only as (item_id, key) — plus the
     * postings/norms projections OF those columns in cosine mode — so
@@ -349,10 +341,17 @@ object StreamDedup {
     val items = spark.read.parquet(s"$stateDir/items")
     val sigs = spark.read.parquet(s"$stateDir/sigs")
     val (postings, norms) = IndexBuild.gramProjections(items, conf)
-    IndexTables(conf, items, spark.read.parquet(s"$stateDir/members"), postings, norms, sigs,
-      sigs.select(col("item_id"), explode(col("band_hashes")).as("band_key")))
+    IndexTables(conf, items, spark.read.parquet(s"$stateDir/members"), postings, norms, sigs)
   }
 
+  /** The state tables as the batch kernel's IndexTables view, so
+    * verification runs the EXACT batch code path. postings/norms are the
+    * same recompute-on-read projections the batch pipeline uses
+    * (FuzzyPipeline.mapSideStages) — and verifyPairs semi-join-prunes
+    * postings to candidate endpoints before the scan, so the cosine-mode
+    * projections never materialize corpus-wide here either (lev mode, the
+    * default, reads only items + sigs).
+    */
   def stateIndex(spark: SparkSession, stateDir: String, conf: FuzzyConf): IndexTables = {
     val items = spark.read.parquet(s"$stateDir/items")
     val members = spark.read.parquet(s"$stateDir/members")
@@ -361,8 +360,7 @@ object StreamDedup {
     val itemsN = items.join(
       members.groupBy("item_id").agg(count(lit(1)).as("n_members")),
       Seq("item_id"))
-    IndexTables(conf, itemsN, members, postings, norms, sigs,
-      sigs.select(col("item_id"), explode(col("band_hashes")).as("band_key")))
+    IndexTables(conf, itemsN, members, postings, norms, sigs)
   }
 
   /** All verified edges accumulated so far: (a_id, b_id, kind, score).

@@ -2,6 +2,7 @@ package graft.api
 
 import graft.SparkTestSession
 import graft.conf.FuzzyConf
+import graft.sql.ProbeDotsExpr
 import graft.text.FuzzySetRef
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -272,6 +273,7 @@ class FuzzyPipelineSpec extends AnyFunSuite with Matchers {
     val p1 = FuzzyPipeline(spark, corpusDF(corpus), "clip_id", "transcript",
       FuzzyConf(), Some(dir))
     val r1 = p1.clusters().as[(String, String)].collect().sorted
+    val x1 = p1.clustersExhaustive().as[(String, String)].collect().sorted
     // resume: new pipeline object, same dir — must not recompute (mtimes fixed)
     val meta = java.nio.file.Paths.get(dir, "items", "_graft_meta.json")
     val clustersMeta = java.nio.file.Paths.get(dir, "clusters", "_graft_meta.json")
@@ -290,6 +292,25 @@ class FuzzyPipelineSpec extends AnyFunSuite with Matchers {
     // resume of clusters() must never have initialized the candidate memo
     // (the fuzzy branch's entry point)
     p2.candidatesCache shouldBe null
+    // likewise the exhaustive stages: the self-find runs its scoring jobs
+    // when called, so a resume that reached it would execute probe_dots
+    val probeDotPlans = new java.util.concurrent.atomic.AtomicInteger
+    val planWatch = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit =
+        if (qe.analyzed.exists(_.expressions.exists(_.exists(_.isInstanceOf[ProbeDotsExpr]))))
+          probeDotPlans.incrementAndGet()
+      def onFailure(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    org.apache.spark.ListenerBusDrain(spark.sparkContext) // p1's self-find plans
+    spark.listenerManager.register(planWatch)
+    try {
+      p2.clustersExhaustive().as[(String, String)].collect().sorted shouldBe x1
+      p2.dedupEdgesExhaustive().collect()
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(planWatch)
+    probeDotPlans.get shouldBe 0
     // config change invalidates
     val p3 = FuzzyPipeline(spark, corpusDF(corpus), "clip_id", "transcript",
       FuzzyConf(gramHi = 4), Some(dir))

@@ -26,7 +26,7 @@ import org.scalatest.matchers.should.Matchers
   * it; at 10^12 rows reproducing the percolation would merge the corpus
   * into one component and is quadratic. The honest invariants, pinned
   * here at a tractable size (the exhaustive path is quadratic BY CONTRACT
-  * — 20k costs ~38 min even at local[32]):
+  * — its self-find alone takes ~37 s at 6k clips on a 4-core box):
   *
   *  1. at minScore 0.5 — above the coincidental-match band — the two
   *     paths' cluster labels agree >= 0.999 (the verdict's bar);

@@ -3,21 +3,24 @@ package graft.stage
 import graft.SparkTestSession
 import graft.api.FuzzyPipeline
 import graft.conf.FuzzyConf
+import graft.sql.ProbeDotsExpr
 import graft.text.{FuzzySetRef, Gram}
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 /** `findMin` (probes scored map-side against a broadcast probe index)
   * against the in-memory reference, a stop-list-aware scorer, and its job
-  * budget.
+  * budget; the exhaustive self-find against the same scorer and its plan
+  * shape.
   */
 class FindLookupSpec extends AnyFunSuite with Matchers {
   private lazy val spark = SparkTestSession.spark
@@ -117,10 +120,42 @@ class FindLookupSpec extends AnyFunSuite with Matchers {
     rows(p.findMin(0.33, probesDF(probes))) shouldBe expected
   }
 
-  /** The lookup's rows for one probe, scored directly over `corpus` with
-    * the stop-list `stop` applied: dot products over the grams not in
+  private def lowerKey(s: String): String = s.toLowerCase(java.util.Locale.ROOT)
+
+  /** (score, item key, original) of every item in `items` (key, original)
+    * that passes minScore for probe key `k` at gram size n, scored directly
+    * with the stop-list `stop` applied: dot products over the grams not in
     * `stop(n)`, full magnitudes, the top `topKRerank` by (cosine desc, key
-    * asc), the Levenshtein rerank, minScore, and the size cascade.
+    * asc) and the Levenshtein rerank.
+    */
+  private def stopListScores(
+      items: Seq[(String, String)],
+      stop: Map[Int, Set[String]],
+      conf: FuzzyConf,
+      k: String,
+      n: Int,
+      minScore: Double): Seq[(Double, String, String)] = {
+    val qv = Gram.gramVector(k, n)
+    val qmag = Gram.norm(qv.values)
+    val stopN = stop.getOrElse(n, Set.empty[String])
+    val cosines = items.flatMap { case (ikey, original) =>
+      val iv = Gram.gramVector(ikey, n)
+      val dot = qv.iterator.filterNot(g => stopN(g._1)).map { case (g, c) =>
+        c.toLong * iv.getOrElse(g, 0)
+      }.sum
+      if (dot == 0) None else Some((dot / (qmag * Gram.norm(iv.values)), ikey, original))
+    }
+    val scored =
+      if (conf.useLevenshtein)
+        cosines.sortBy { case (c, ikey, _) => (-c, ikey) }.take(conf.topKRerank)
+          .map { case (_, ikey, original) => (Gram.levenshteinNorm(k, ikey), ikey, original) }
+      else cosines
+    scored.filter(_._1 >= minScore)
+  }
+
+  /** The lookup's rows for one probe over `corpus` with the stop-list
+    * `stop`: the exact short-circuit, then [[stopListScores]] down the size
+    * cascade.
     */
   private def stopListOracle(
       corpus: Seq[String],
@@ -129,31 +164,40 @@ class FindLookupSpec extends AnyFunSuite with Matchers {
       q: String,
       query: String,
       minScore: Double): Seq[Key] = {
-    val lower = (s: String) => s.toLowerCase(java.util.Locale.ROOT)
-    val items = corpus.map(o => lower(o) -> o).distinctBy(_._1) // first writer wins
-    val k = lower(query)
+    val items = corpus.map(o => lowerKey(o) -> o).distinctBy(_._1) // first writer wins
+    val k = lowerKey(query)
     items.find(_._1 == k) match {
       case Some((_, original)) => Seq(key(q, 1.0, original, 0))
       case None =>
         conf.sizesDesc.iterator.map { n =>
-          val qv = Gram.gramVector(k, n)
-          val qmag = Gram.norm(qv.values)
-          val stopN = stop.getOrElse(n, Set.empty[String])
-          val cosines = items.flatMap { case (ikey, original) =>
-            val iv = Gram.gramVector(ikey, n)
-            val dot = qv.iterator.filterNot(g => stopN(g._1)).map { case (g, c) =>
-              c.toLong * iv.getOrElse(g, 0)
-            }.sum
-            if (dot == 0) None else Some((dot / (qmag * Gram.norm(iv.values)), ikey, original))
-          }
-          val scored =
-            if (conf.useLevenshtein)
-              cosines.sortBy { case (c, ikey, _) => (-c, ikey) }.take(conf.topKRerank)
-                .map { case (_, ikey, original) => (Gram.levenshteinNorm(k, ikey), original) }
-            else cosines.map { case (c, _, original) => (c, original) }
-          scored.filter(_._1 >= minScore).map { case (s, original) => key(q, s, original, n) }
+          stopListScores(items, stop, conf, k, n, minScore)
+            .map { case (s, _, original) => key(q, s, original, n) }
         }.find(_.nonEmpty).getOrElse(Nil)
     }
+  }
+
+  /** The self-find's (a_id, b_id, score) edges over `corpus` (ids as in
+    * [[corpusDF]]) with the stop-list `stop`: every item key is a probe
+    * with no exact short-circuit, ranked with itself among the items, and
+    * the self-match is dropped after ranking; a key falls through to the
+    * next size when only its self-match passed.
+    */
+  private def selfFindOracle(
+      corpus: Seq[String],
+      stop: Map[Int, Set[String]],
+      conf: FuzzyConf,
+      minScore: Double): Seq[(String, String, Long)] = {
+    val withIds = corpus.zipWithIndex
+      .map { case (o, i) => (lowerKey(o), o, f"c$i%06d") }
+      .distinctBy(_._1) // first writer (= minimum id) wins
+    val items = withIds.map(t => t._1 -> t._2)
+    val idOf = withIds.map(t => t._1 -> t._3).toMap
+    withIds.flatMap { case (k, _, id) =>
+      conf.sizesDesc.iterator
+        .map(n => stopListScores(items, stop, conf, k, n, minScore).filter(_._2 != k))
+        .find(_.nonEmpty).getOrElse(Nil)
+        .map { case (s, ikey, _) => (id, idOf(ikey), math.round(s * 1e9)) }
+    }.sorted
   }
 
   test("with a tiny stop-list threshold the lookup == a stop-list-aware scorer") {
@@ -173,6 +217,55 @@ class FindLookupSpec extends AnyFunSuite with Matchers {
     val got = rows(p.findMin(0.33, probesDF(probes)))
     got should not be empty
     got shouldBe expected(stop)
+  }
+
+  test("with a tiny stop-list threshold the self-find == a stop-list-aware scorer") {
+    val conf = FuzzyConf(maxPostingsPerGram = 2)
+    val p = FuzzyPipeline(spark, corpusDF(states), "clip_id", "transcript", conf)
+    val stop = p.index.stopGrams
+    stop.values.map(_.size).sum should be > 0
+    val expected = selfFindOracle(states, stop, conf, 0.33)
+    // fixture: the stop-list changes the answer, so a self-find that
+    // ignored it could not pass
+    expected should not be selfFindOracle(states, Map.empty, conf, 0.33)
+    val got = FindStage.selfFindEdges(p.index, 0.33)
+      .select("a_id", "b_id", "score").as[(String, String, Double)].collect()
+      .map { case (a, b, s) => (a, b, math.round(s * 1e9)) }.toSeq.sorted
+    got should not be empty
+    got shouldBe expected
+  }
+
+  test("the self-find on a warmed index scores through probe_dots, with no gram-keyed join or aggregate") {
+    val sc = spark.sparkContext
+    def refsGram(e: Expression): Boolean = e.references.exists(_.name == "gram")
+    val gramOps = scala.collection.mutable.ArrayBuffer.empty[String]
+    var probeDotPlans = 0
+    val planWatch = new QueryExecutionListener with AdaptiveSparkPlanHelper {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        val hits = collect(qe.executedPlan) {
+          case a: BaseAggregateExec if a.groupingExpressions.exists(refsGram) => a.nodeName
+          case j: BaseJoinExec if (j.leftKeys ++ j.rightKeys).exists(refsGram) => j.nodeName
+        }
+        val dots = qe.analyzed.exists(_.expressions.exists(_.exists(_.isInstanceOf[ProbeDotsExpr])))
+        gramOps.synchronized {
+          gramOps ++= hits
+          if (dots) probeDotPlans += 1
+        }
+      }
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val p = FuzzyPipeline(spark, corpusDF(states), "clip_id", "transcript")
+    p.index.stopGrams // warm: the stop-list is the index's one gram-keyed aggregate
+    ListenerBusDrain(sc)
+    spark.listenerManager.register(planWatch)
+    try {
+      FindStage.selfFindEdges(p.index, 0.33).collect()
+      ListenerBusDrain(sc)
+    } finally spark.listenerManager.unregister(planWatch)
+    gramOps.synchronized {
+      gramOps shouldBe empty
+      probeDotPlans should be > 0
+    }
   }
 
   test("a warmed 6-probe lookup runs at most 8 jobs and never aggregates postings again") {

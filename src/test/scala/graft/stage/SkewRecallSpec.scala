@@ -42,8 +42,9 @@ class SkewRecallSpec extends AnyFunSuite with Matchers {
 
     // the fixture genuinely exercises the star regime: at least one LSH
     // band bucket must exceed maxSaltedBucket
-    import org.apache.spark.sql.functions.{count => fcount, max => fmax}
-    val maxBucket = p.index.bands
+    import org.apache.spark.sql.functions.{col, explode, count => fcount, max => fmax}
+    val maxBucket = p.index.sigs
+      .select(explode(col("band_hashes")).as("band_key"))
       .groupBy("band_key").agg(fcount(org.apache.spark.sql.functions.lit(1)).as("n"))
       .agg(fmax("n")).as[Long].head()
     maxBucket should be > conf.maxSaltedBucket.toLong

@@ -91,7 +91,7 @@ object VerifyProbe {
     t("verifyPairs (engine)") {
       val sc2 = new Scratch
       val n = graft.stage.FindStage.verifyPairs(pairs,
-        graft.stage.IndexTables(conf, items, null, null, null, sigs, null), conf.minScore, sc2)
+        graft.stage.IndexTables(conf, items, null, null, null, sigs), conf.minScore, sc2)
         .count()
       sc2.release()
       n
